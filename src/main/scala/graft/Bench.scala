@@ -8,26 +8,23 @@ import org.apache.spark.sql.SparkSession
   * under-time expression-heavy operators (fingerprints, cosine scoring).
   */
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
-    // Warm-up: JIT + page cache, one scan per table.
+  /** Warm-up before any timing: JIT and page cache, one scan per table
+    * (a table missing at this scale is skipped).
+    */
+  def warmUp(spark: SparkSession, sfDir: String): Unit =
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings")
       .foreach { t =>
         try spark.read.parquet(s"$sfDir/$t.parquet").count()
         catch { case _: Throwable => () }
       }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = GraftSession.local()
+    spark.sparkContext.setLogLevel("WARN")
+    warmUp(spark, sfDir)
 
     // Two full passes plus targeted retries, keeping each query's best
     // time. The sandbox kernel sporadically freezes a single thread for
@@ -167,8 +164,10 @@ object Bench {
     // the line with "[info] " and its "[success] Total time" trailer
     // printed after it (both fixed in build.sbt — StdoutOutput +
     // showSuccess:=false). Per-query values are rounded to milliseconds
-    // so the line stays compact (~4 KB for 169 queries); spark.stop()
-    // runs FIRST so no shutdown logging can interleave after the line.
+    // so the line stays compact (~4 KB for 169 queries): they are display
+    // precision and need not sum to `value`, which is the authoritative
+    // full-precision total. spark.stop() runs FIRST so no shutdown logging
+    // can interleave after the line.
     spark.stop()
     val qsMs = ok.map { case (k, v) =>
       "\"" + k + "\":" + (math.round(v * 1000) / 1000.0)

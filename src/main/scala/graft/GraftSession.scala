@@ -2,31 +2,42 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory with the engine's recommended defaults, for users
-  * embedding graft outside the driver contract. The knobs are the ones that
-  * matter at fleet scale; every one can still be overridden afterwards.
+/** The one session factory: every main, tool and spec builds its local
+  * SparkSession here, so the conf they all need is written once.
   */
 object GraftSession {
 
-  /** @param shufflePartitions size to ~2-3x total executor cores on a real
-    *                          cluster; the callers here pass the local core
-    *                          count.
+  /** Local cores: `SPARK_GRAFT_CPUS`, else every available processor. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  /** A `local[cpus]` session with `cpus` shuffle partitions, the UTC session
+    * time zone, INT64(NANOS) parquet timestamps read as longs (the driver
+    * testdata carries them) and the UI off. `conf` is applied last, so an
+    * entry overrides any of these, `spark.master` included.
     */
-  def builder(appName: String = "graft",
-              master: Option[String] = None,
-              shufflePartitions: Int = 200): SparkSession.Builder = {
+  def local(cpus: Int = GraftSession.cpus,
+            conf: Seq[(String, String)] = Nil): SparkSession = {
     val b = SparkSession.builder()
-      .appName(appName)
-      // AQE: runtime re-plan for skew joins + partition coalescing
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
-      // the driver testdata carries INT64(NANOS) timestamps
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // graft SQL functions available out of the box
-      .config("spark.sql.extensions", "graft.GraftSparkExtensions")
-    master.fold(b)(b.master)
+      .config("spark.ui.enabled", "false")
+    conf.foreach { case (k, v) => b.config(k, v) }
+    b.getOrCreate()
   }
+
+  /** `k1=v1,k2=v2` → conf entries. A value keeps everything after its first
+    * `=`, so `-XX:Flag=n` option strings survive; blank entries are skipped
+    * and an entry without a key or an `=` raises.
+    */
+  def parseConf(s: String): Seq[(String, String)] =
+    s.split(',').toSeq.map(_.trim).filter(_.nonEmpty).map { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) if k.trim.nonEmpty => k.trim -> v.trim
+        case _ => throw new IllegalArgumentException(
+          s"malformed conf entry '$kv': expected key=value")
+      }
+    }
 }

@@ -6,8 +6,8 @@ import org.apache.spark.sql.graftbridge.GraftFunctions
 /** `spark.sql.extensions` entry point: registers graft's native expressions
   * as SQL functions at session build.
   *
-  *   SparkSession.builder()
-  *     .config("spark.sql.extensions", "graft.GraftSparkExtensions")
+  *   GraftSession.local(conf =
+  *     Seq("spark.sql.extensions" -> "graft.GraftSparkExtensions"))
   *
   * For an already-running session use
   * `org.apache.spark.sql.graftbridge.GraftFunctions.register(spark)`.

@@ -26,16 +26,10 @@ private[apps] object AppUtil {
       case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
     }.toMap
 
-  def session(appName: String): SparkSession = {
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    SparkSession.builder()
-      .appName(appName)
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-  }
+  /** `SPARK_GRAFT_MASTER`, when set, replaces the local master. */
+  def session(appName: String): SparkSession =
+    graft.GraftSession.local(conf = ("spark.app.name" -> appName) +:
+      sys.env.get("SPARK_GRAFT_MASTER").map("spark.master" -> _).toSeq)
 
   def emit(df: DataFrame, target: Option[String]): Unit = target match {
     case Some(file) => Sinks.writeCsvSingleFile(df, file)

@@ -341,8 +341,7 @@ object Dedup {
 
   /** The candidate join BEFORE the pair distinct — (s_id, l_id) rows, one
     * per shared prefix token that survives the length and positional
-    * bounds. Split out so the D4Probe instrument can count the raw fanout
-    * the prefix filters admit.
+    * bounds: the raw fanout the prefix filters admit.
     */
   private[graft] def jaccardCandidatesRaw(sets: DataFrame,
                                           minJaccard: Double): DataFrame = {
@@ -377,7 +376,7 @@ object Dedup {
     // What this buys, precisely: the POST-positional-filter match set is
     // provably unchanged (the positional bound least(ns−rs, nl−rl)+1 ≥ α
     // already implies rs ≤ ns − α + 1, which subsumes the short bound —
-    // D4Probe measures identical surviving fanout), so the gain is the
+    // the surviving fanout measured identical), so the gain is the
     // s-side FRAME feeding the join: ~44 % fewer rows through the
     // candidate exchange once the prefix frames are past the broadcast
     // threshold (guide §2.3, shuffle fewer bytes), and proportionally

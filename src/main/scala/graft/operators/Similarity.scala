@@ -344,8 +344,8 @@ object Similarity {
     // held driver-side — and feeds both the seeds and every Lloyd round.
     // The previous shape ran each round as a cluster-wide
     // projection+aggregate+collect; at sf0.1 each of those rounds measured
-    // 1.93 s of almost pure fixed stage overhead (S5Tune: train3 12.19 s vs
-    // train0 6.40 s on 64k subvector rows), and at fleet scale each round
+    // 1.93 s of almost pure fixed stage overhead (3 rounds 12.19 s vs
+    // 0 rounds 6.40 s on 64k subvector rows), and at fleet scale each round
     // was a full scheduling BARRIER over a sample-sized frame. LloydLocal
     // replicates the removed Spark expressions bit-for-bit (see its
     // scaladoc for the op-by-op correspondence; SimilaritySpec pins the
@@ -873,7 +873,7 @@ private[graft] object LloydLocal {
     // across driver threads and the partial maps merge in any order with
     // a bit-identical result. The BigDecimal HALF_UP rounding inside the
     // argmin is the hot op (~0.9 s/round single-threaded at sf0.1's 64k
-    // rows — measured via S5Tune) and parallelizes embarrassingly.
+    // rows, measured) and parallelizes embarrassingly.
     val nThreads = math.min(math.max(1,
       Runtime.getRuntime.availableProcessors()), math.max(1, rows.length))
     val chunkSize = math.max(1, (rows.length + nThreads - 1) / nThreads)

@@ -1041,7 +1041,7 @@ object Warc {
     * heavy part — record framing, deflate, digests, per-container file
     * commits — so AQE's byte-count heuristic coalesced the whole stage
     * onto ONE task (measured: the staging write ran tasks=1 for 2.5 s of
-    * a 2.8 s w4 at sf0.1; the WProbe listener rows pin it). A
+    * a 2.8 s w4 at sf0.1, per a task listener). A
     * `repartition(n, shard_id)` is a user-specified-width exchange
     * (REPARTITION_BY_NUM), which AQE never coalesces, and the groupBy on
     * the same column reuses it (ClusteredDistribution(shard_id) is

@@ -3,6 +3,7 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
   GroupStateTimeout, MapState, OutputMode, StatefulProcessor, TTLConfig,
@@ -37,6 +38,11 @@ object StreamOps {
 
   case class Event(event_id: Long, ts: Timestamp, user_id: Long,
                    event_type: String, value: Double)
+
+  /** Event time in epoch µs, exact: `Timestamp.getTime` drops the
+    * sub-millisecond part that the batch twins and the oracle keep.
+    */
+  private def micros(ts: Timestamp): Long = DateTimeUtils.fromJavaTimestamp(ts)
 
   case class RunState(eventType: String, startUs: Long, endUs: Long, n: Long)
 
@@ -99,13 +105,13 @@ object StreamOps {
       .groupByKey(e => (e.user_id, e.event_type))
       .mapGroupsWithState[RateState, RateUpdate](GroupStateTimeout.NoTimeout) {
         case ((user, typ), it, state) =>
-          val sorted = it.toSeq.sortBy(_.ts.getTime)
+          val sorted = it.toSeq.sortBy(e => micros(e.ts))
           var s = state.getOption.getOrElse {
             val h = sorted.head
-            RateState(h.ts.getTime * 1000L, h.value, h.ts.getTime * 1000L, h.value)
+            RateState(micros(h.ts), h.value, micros(h.ts), h.value)
           }
           sorted.foreach { e =>
-            val us = e.ts.getTime * 1000L
+            val us = micros(e.ts)
             if (us < s.tFirstUs) s = s.copy(tFirstUs = us, vFirst = e.value)
             if (us >= s.tLastUs) s = s.copy(tLastUs = us, vLast = e.value)
           }
@@ -1138,11 +1144,11 @@ object StreamOps {
       .flatMapGroupsWithState[RunState, AccidentRun](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (userId: Long, it: Iterator[Event], state: GroupState[RunState]) =>
-          val sorted = it.toSeq.sortBy(_.ts.getTime)
+          val sorted = it.toSeq.sortBy(e => micros(e.ts))
           var cur = state.getOption
           val out = Seq.newBuilder[AccidentRun]
           sorted.foreach { e =>
-            val us = e.ts.getTime * 1000L
+            val us = micros(e.ts)
             cur match {
               case Some(r) if r.eventType == e.event_type =>
                 cur = Some(r.copy(endUs = us, n = r.n + 1))
@@ -1178,11 +1184,11 @@ object StreamOps {
 
     override def handleInputRows(userId: Long, rows: Iterator[Event],
                                  tv: TimerValues): Iterator[AccidentRun] = {
-      val sorted = rows.toSeq.sortBy(_.ts.getTime)
+      val sorted = rows.toSeq.sortBy(e => micros(e.ts))
       var cur = if (run.exists()) Some(run.get()) else None
       val out = Seq.newBuilder[AccidentRun]
       sorted.foreach { e =>
-        val us = e.ts.getTime * 1000L
+        val us = micros(e.ts)
         cur match {
           case Some(r) if r.eventType == e.event_type =>
             cur = Some(r.copy(endUs = us, n = r.n + 1))
@@ -1209,7 +1215,7 @@ object StreamOps {
         TimeMode.None(), OutputMode.Append())
   }
 
-  case class SessionAgg(startMs: Long, endMs: Long, n: Long, sum: Double)
+  case class SessionAgg(startUs: Long, endUs: Long, n: Long, sum: Double)
 
   case class UserSession(user_id: Long, t_start_us: Long, t_end_us: Long,
                          n_events: Long, sum_value: Double)
@@ -1226,6 +1232,11 @@ object StreamOps {
   class SessionizeProcessor(gapMs: Long)
       extends StatefulProcessor[Long, Event, UserSession] {
     @transient private var sess: ValueState[SessionAgg] = _
+    private val gapUs = gapMs * 1000L
+
+    /** Timer time (ms, rounded up) at which no event can extend `s`. */
+    private def horizonMs(s: SessionAgg): Long =
+      Math.floorDiv(s.endUs + gapUs + 999L, 1000L)
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       sess = getHandle.getValueState[SessionAgg](
@@ -1233,28 +1244,28 @@ object StreamOps {
 
     override def handleInputRows(userId: Long, rows: Iterator[Event],
                                  tv: TimerValues): Iterator[UserSession] = {
-      val sorted = rows.toSeq.sortBy(_.ts.getTime)
+      val sorted = rows.toSeq.sortBy(e => micros(e.ts))
       var cur = if (sess.exists()) Some(sess.get()) else None
       val out = Seq.newBuilder[UserSession]
       sorted.foreach { e =>
-        val ms = e.ts.getTime
+        val us = micros(e.ts)
         cur match {
-          case Some(s) if ms - s.endMs <= gapMs =>
-            cur = Some(SessionAgg(s.startMs, math.max(s.endMs, ms),
+          case Some(s) if us - s.endUs <= gapUs =>
+            cur = Some(SessionAgg(s.startUs, math.max(s.endUs, us),
               s.n + 1, s.sum + e.value))
           case Some(s) =>
             // gap exceeded inside the batch: close in-line, open a new one
-            out += UserSession(userId, s.startMs * 1000L, s.endMs * 1000L, s.n, s.sum)
-            cur = Some(SessionAgg(ms, ms, 1, e.value))
+            out += UserSession(userId, s.startUs, s.endUs, s.n, s.sum)
+            cur = Some(SessionAgg(us, us, 1, e.value))
           case None =>
-            cur = Some(SessionAgg(ms, ms, 1, e.value))
+            cur = Some(SessionAgg(us, us, 1, e.value))
         }
       }
       cur.foreach { s =>
         sess.update(s)
         // one live timer per key: re-arm at the new session horizon
         getHandle.listTimers().foreach(getHandle.deleteTimer)
-        getHandle.registerTimer(s.endMs + gapMs)
+        getHandle.registerTimer(horizonMs(s))
       }
       out.result().iterator
     }
@@ -1263,10 +1274,9 @@ object StreamOps {
                                     info: ExpiredTimerInfo): Iterator[UserSession] =
       if (sess.exists()) {
         val s = sess.get()
-        if (info.getExpiryTimeInMs() >= s.endMs + gapMs) {
+        if (info.getExpiryTimeInMs() >= horizonMs(s)) {
           sess.clear()
-          Iterator.single(
-            UserSession(userId, s.startMs * 1000L, s.endMs * 1000L, s.n, s.sum))
+          Iterator.single(UserSession(userId, s.startUs, s.endUs, s.n, s.sum))
         } else Iterator.empty // stale timer from a since-extended session
       } else Iterator.empty
   }
@@ -1811,11 +1821,11 @@ object StreamOps {
       .flatMapGroupsWithState[PairState, SaturatedPair](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (userId: Long, it: Iterator[Event], state: GroupState[PairState]) =>
-          val sorted = it.toSeq.sortBy(_.ts.getTime)
+          val sorted = it.toSeq.sortBy(e => micros(e.ts))
           var last = state.getOption.map(_.lastUs)
           val out = Seq.newBuilder[SaturatedPair]
           sorted.foreach { e =>
-            val us = e.ts.getTime * 1000L
+            val us = micros(e.ts)
             last.foreach { p =>
               if (us - p < maxGapUs) out += SaturatedPair(userId, p, us, 2L)
             }

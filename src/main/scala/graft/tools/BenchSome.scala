@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 
 /** Time a subset of SparkEntry queries (default: all), N iterations each —
   * the fast inner loop for performance work, forked with the same JVM flags
@@ -13,28 +11,11 @@ object BenchSome {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val iters = args.lift(1).map(_.toInt).getOrElse(1)
     val names = args.drop(2).toSet
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
     // extra confs: SPARK_GRAFT_CONF="k1=v1,k2=v2"
-    sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(',')).map(_.split('=')).collect {
-        case Array(k, v) => builder.config(k.trim, v.trim)
-      }
-    val spark = builder.getOrCreate()
+    val spark = GraftSession.local(conf =
+      GraftSession.parseConf(sys.env.getOrElse("SPARK_GRAFT_CONF", "")))
     spark.sparkContext.setLogLevel("WARN")
-
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "events", "documents", "embeddings")
-      .foreach { t =>
-        try spark.read.parquet(s"$sfDir/$t.parquet").count()
-        catch { case _: Throwable => () }
-      }
+    graft.Bench.warmUp(spark, sfDir)
 
     // Bucketed-substrate mode (SPARK_GRAFT_BUCKETED=<db>): build
     // writeBucketedFacts' catalog tables in THIS session (the in-memory

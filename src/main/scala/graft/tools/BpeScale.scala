@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.CacheRegistry
 import graft.operators.TextAnalysis
 
@@ -16,14 +14,7 @@ object BpeScale {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val budgets = if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(10, 100, 1000)
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     // warm the page cache + JIT once, then time each budget fresh
     TextAnalysis.bpeMerges(spark, dir, 5).collect()

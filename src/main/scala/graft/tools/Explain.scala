@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 
 /** Prints the formatted physical plan of one or more SparkEntry queries.
   *
@@ -12,19 +10,11 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = args.drop(1)
-    val builder = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
     // extra confs: SPARK_GRAFT_CONF="k1=v1,k2=v2" (the BenchSome knob) —
     // e.g. autoBroadcastJoinThreshold=-1 to dump the forced-shuffle plan
-    sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(',')).map(_.split('=')).collect {
-        case Array(k, v) => builder.config(k.trim, v.trim)
-      }
-    val spark = builder.getOrCreate()
+    val spark = GraftSession.local(cpus = 4,
+      conf = ("spark.sql.adaptive.enabled" -> "false") +:
+        GraftSession.parseConf(sys.env.getOrElse("SPARK_GRAFT_CONF", "")))
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       println(s"==== $name ====")

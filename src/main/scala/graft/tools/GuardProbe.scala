@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -19,14 +18,7 @@ object GuardProbe {
     val dir = args(0)
     val caps = args.lift(1).map(_.split(",").map(_.toInt).toSeq)
       .getOrElse(Seq(2000, 500, 200, 100))
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
 
     // d2: band-bucket sizes under the production banding (32 hashes, 8 bands)

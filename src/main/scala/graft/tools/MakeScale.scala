@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Synthesizes an m-fold documents+embeddings slice from a base SF dir for
@@ -49,14 +48,7 @@ object MakeScale {
     require(Set("docs", "events", "facts")(mode),
       s"unknown MakeScale mode '$mode' — expected 'docs', 'events' or " +
         "'facts' (a typo here would silently measure a base-linked table)")
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
 
     if (mode == "events") {

@@ -4,8 +4,6 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
-
 import graft.operators.Curation
 import graft.sinks.Sinks
 
@@ -25,14 +23,7 @@ object PipelineScale {
     val outJson = args.lift(1).getOrElse("E2E_scale.json")
     val budget = args.lift(2).map(_.toLong).getOrElse(1500000L)
     val maxRows = args.lift(3).map(_.toInt).getOrElse(4096)
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
 
     def shardFiles(root: Path): Seq[Path] = {

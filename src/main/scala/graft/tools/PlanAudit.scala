@@ -2,10 +2,9 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 
 /** Writes PLANS.md: a per-query physical-plan audit (joins, exchanges,
   * codegen spans, scan pushdown evidence). Run with AQE disabled so the
@@ -27,13 +26,8 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val dir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val out = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus = 4,
+      conf = Seq("spark.sql.adaptive.enabled" -> "false"))
     spark.sparkContext.setLogLevel("ERROR")
 
     val sb = new StringBuilder

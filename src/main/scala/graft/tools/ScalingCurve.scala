@@ -31,14 +31,7 @@ object ScalingCurve {
       (m.toInt, dir)
     }
     val only = nameArgs.toSet
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
 
     def queries(m: Int): Seq[(String, (SparkSession, String) => DataFrame)] = Seq(

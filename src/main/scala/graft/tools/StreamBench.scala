@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -16,31 +16,44 @@ import graft.streaming.StreamOps
   * (extra args = only run ops whose name is listed — the BenchSome pattern)
   */
 object StreamBench {
+
+  /** Stages the stream input: `events` as up to `chunks` parquet files under
+    * `dir`, each one micro-batch (maxFilesPerTrigger=1), in event-time
+    * order — file i holds a ts range wholly before file i+1's, and the
+    * files' mtimes increase in that order because the file source takes
+    * them by mtime. Unordered batches would each span the whole input, and
+    * from the second batch on the watermark would drop most rows as late.
+    * Returns the files in batch order.
+    */
+  private[graft] def stage(events: DataFrame, chunks: Int,
+                           dir: String): Seq[java.io.File] = {
+    events.repartitionByRange(chunks, col("ts")).sortWithinPartitions("ts")
+      .write.mode("overwrite").parquet(dir)
+    val files = new java.io.File(dir).listFiles().toSeq
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+      .sortBy(_.getName) // part-NNNNN: the range partition index
+    files.zipWithIndex.foreach { case (f, i) =>
+      f.setLastModified(1700000000000L + i * 1000L)
+    }
+    files
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val chunks = args.lift(1).map(_.toInt).getOrElse(8)
     val replicas = args.lift(2).map(_.toInt).getOrElse(10)
     val only = args.drop(3).toSet
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
     // Shuffle partitions = state-store instances for stateful streams; size
     // them to state volume, not core count — every extra partition is an
     // extra store snapshot+commit per micro-batch (2-3x throughput at 8 vs
     // 32 here). Scan parallelism still uses all cores via file splits.
     val stateParts = sys.env.getOrElse("SPARK_GRAFT_STATE_PARTS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", stateParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(
+      conf = Seq("spark.sql.shuffle.partitions" -> stateParts))
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
-    // Stage the stream input: the events table as `chunks` parquet files,
-    // each one micro-batch (maxFilesPerTrigger=1).
     val in = "/tmp/graft_stream_in"
     val base = graft.Tables.events(spark, sfDir)
       .select(col("event_id"), col("ts"), col("user_id"),
@@ -55,7 +68,7 @@ object StreamBench {
       .select((col("event_id") + col("rep") * idSpan).as("event_id"),
         col("ts"), col("user_id"), col("event_type"), col("value"))
     val n = baseN * replicas
-    events.repartition(chunks).write.mode("overwrite").parquet(in)
+    stage(events, chunks, in)
     val schema = spark.read.parquet(in).schema
 
     def stream(): DataFrame = spark.readStream.schema(schema)

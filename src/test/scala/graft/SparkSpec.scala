@@ -19,13 +19,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-tests")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      Files.createTempDirectory("graft-warehouse-").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val session: SparkSession = GraftSession.local(cpus = 4, conf = Seq(
+    "spark.app.name" -> "graft-tests",
+    "spark.sql.warehouse.dir" ->
+      Files.createTempDirectory("graft-warehouse-").toString))
 }

@@ -2,6 +2,8 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.{Dataset, Encoder}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -345,6 +347,66 @@ class StreamOpsSpec extends SparkSpec {
       assert(rows.length == 1)
       assert(rows.head.getAs[Long]("n_trips") == 2L)
     } finally q.stop()
+  }
+
+  // Event times with a sub-millisecond part: the stateful twins must carry
+  // them to the output exactly, as the batch twins and the oracle do.
+  private val t0Us = 1704067200000000L + 1234567L // 2024-01-01 00:00:01.234567
+  private def evUs(id: Long, us: Long, user: Long, typ: String,
+                   value: Double = 1.0): Event =
+    Event(id, DateTimeUtils.toJavaTimestamp(us), user, typ, value)
+  private val runOfFourThenBreak =
+    (0 to 3).map(i => evUs(i, t0Us + i * 60000001L, 1L, "click")) :+
+      evUs(4, t0Us + 4 * 60000001L, 1L, "view")
+  private val runOfFour = AccidentRun(1L, "click", t0Us, t0Us + 3 * 60000001L, 4L)
+
+  /** Feeds `batches` to `op`, one micro-batch each; returns its output. */
+  private def outputOf[T: Encoder](name: String, mode: OutputMode)(
+      op: Dataset[Event] => Dataset[T])(batches: Seq[Event]*): Seq[T] = {
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[Event]
+    val q = op(input.toDS()).writeStream.format("memory").queryName(name)
+      .outputMode(mode).start()
+    try {
+      batches.foreach { b => input.addData(b); q.processAllAvailable() }
+      spark.table(name).as[T].collect().toSeq
+    } finally q.stop()
+  }
+
+  test("rate of change keeps event time to the microsecond") {
+    // same millisecond, arriving out of order: only µs can order them
+    val out = outputOf[RateUpdate]("rate_us_out", OutputMode.Update)(
+      StreamOps.rateOfChange(spark, _))(
+      Seq(evUs(2, t0Us + 400, 1L, "click", 20.0), evUs(1, t0Us, 1L, "click", 10.0)))
+    assert(out == Seq(RateUpdate(1L, "click", t0Us, t0Us + 400, 10.0 / (400 / 3600e6))))
+  }
+
+  test("accident runs keep event time to the microsecond") {
+    assert(outputOf[AccidentRun]("runs_us_out", OutputMode.Append)(
+      StreamOps.accidentRuns(spark, _))(runOfFourThenBreak) == Seq(runOfFour))
+  }
+
+  test("accident runs via transformWithState keep event time to the microsecond") {
+    assert(withRocksDb(outputOf[AccidentRun]("runs_tws_us_out", OutputMode.Append)(
+      StreamOps.accidentRunsTws(spark, _))(runOfFourThenBreak)) == Seq(runOfFour))
+  }
+
+  test("sessionize via timers keeps event time to the microsecond") {
+    // user 2 moves the watermark past user 1's horizon; the next batch
+    // lets the timer discharge
+    val out = withRocksDb(outputOf[UserSession]("sess_tws_us_out", OutputMode.Append)(
+      StreamOps.sessionizeTws(spark, _, gapMs = 30L * 60 * 1000, watermark = "0 seconds"))(
+      Seq(evUs(1, t0Us, 1L, "click", 2.0), evUs(2, t0Us + 300000999L, 1L, "click", 3.0)),
+      Seq(evUs(3, t0Us + 5400000000L, 2L, "view")),
+      Seq(evUs(4, t0Us + 5700000000L, 2L, "view"))))
+    assert(out == Seq(UserSession(1L, t0Us, t0Us + 300000999L, 2L, 5.0)))
+  }
+
+  test("saturated pairs keep event time to the microsecond") {
+    val out = outputOf[SaturatedPair]("pairs_us_out", OutputMode.Append)(
+      StreamOps.saturatedPairs(spark, _))(
+      Seq(evUs(1, t0Us, 1L, "a")), Seq(evUs(2, t0Us + 300000001L, 1L, "a")))
+    assert(out == Seq(SaturatedPair(1L, t0Us, t0Us + 300000001L, 2L)))
   }
 
   private def tdoc(id: Long, minute: Int, text: String): StreamOps.TextDoc =
