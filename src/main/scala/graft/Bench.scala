@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: times every SparkEntry query at the given SF and prints
   * one JSON line. Queries are fully materialized through the `noop` sink —
@@ -20,6 +20,25 @@ object Bench {
         catch { case _: Throwable => () }
       }
 
+  /** One timed run of a query through the `noop` sink, in seconds. A
+    * failed run returns +Inf, so it can never win a minimum: a fast
+    * exception (e.g. during planning) would otherwise pass for the query's
+    * best time. Operator-internal caches are released afterwards, so one
+    * query's storage memory never skews the next query's timing.
+    */
+  def timeQuery(spark: SparkSession, sfDir: String, tag: String, name: String,
+                fn: (SparkSession, String) => DataFrame): Double = {
+    val t0 = System.nanoTime()
+    try {
+      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      (System.nanoTime() - t0) / 1e9
+    } catch {
+      case e: Throwable =>
+        System.err.println(s"[$tag] $name failed: ${e.getMessage}")
+        Double.PositiveInfinity
+    } finally CacheRegistry.releaseAll()
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local()
@@ -33,10 +52,8 @@ object Bench {
     // stall rate varies by the hour — in bad windows min-of-2 still lands
     // on a stall, so any query whose best time stays over the threshold
     // earns up to two more attempts.
-    // A failed attempt returns +Inf so it can never win the min — otherwise
-    // a fast exception (e.g. during planning) would silently become the
-    // query's published best time. Queries whose every attempt failed are
-    // listed separately in the JSON.
+    // A failed attempt returns +Inf (timeQuery); queries whose every
+    // attempt failed are listed separately in the JSON.
     // Shared keys each query PUBLISHED when it ran (registry diff around
     // the timing) — the retry loop releases exactly these, so a retry
     // re-times the query's own build while upstream family frames it only
@@ -57,59 +74,46 @@ object Bench {
     // memo READ as the query's best time (the exact failure the
     // releaseSharedKeys design exists to prevent).
     val completedOnce = scala.collection.mutable.Set.empty[String]
-    def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    def timeOne(name: String, fn: (SparkSession, String) => DataFrame): Double = {
       val before = CacheRegistry.sharedKeys
-      val t0 = System.nanoTime()
-      var ok = false
-      try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        ok = true
-        (System.nanoTime() - t0) / 1e9
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          Double.PositiveInfinity
-      } finally {
-        if (!attributionFrozen)
-          publishedKeys.update(name,
-            publishedKeys.getOrElse(name, Set.empty) ++
-              (CacheRegistry.sharedKeys -- before))
-        else if (!completedOnce.contains(name)) {
-          // First completed attempt of a query that failed BOTH passes:
-          // the only key observation we will ever get for it — but it may
-          // have rebuilt ABSENT upstream family frames whose owner simply
-          // wasn't retried. Attributing those would let this query's NEXT
-          // retry release them, over-timing any later retry that only
-          // READS them. A rebuilt key whose FAMILY (the slug before the
-          // first ':' — d4scored, p2verdicts, …) some other query already
-          // owns goes to that owner, exactly as the normal pass would
-          // attribute it — attribution stays retry-order-independent even
-          // when two failed queries race to rebuild the same absent
-          // family frame. Only keys with no family owner anywhere stick
-          // to this query.
-          val owned = publishedKeys.iterator
-            .collect { case (n, ks) if n != name => ks }
-            .foldLeft(Set.empty[String])(_ ++ _)
-          def family(k: String) = k.takeWhile(_ != ':')
-          val ownerByFamily = publishedKeys.iterator
-            .collect { case (n, ks) if n != name =>
-              ks.iterator.map(k => family(k) -> n) }
-            .flatten.toMap
-          val fresh = CacheRegistry.sharedKeys -- before -- owned
-          val (toOwner, toSelf) =
-            fresh.partition(k => ownerByFamily.contains(family(k)))
-          toOwner.foreach { k =>
-            val o = ownerByFamily(family(k))
-            publishedKeys.update(o, publishedKeys(o) + k)
-          }
-          publishedKeys.update(name,
-            publishedKeys.getOrElse(name, Set.empty) ++ toSelf)
+      val sec = timeQuery(spark, sfDir, "bench", name, fn)
+      if (!attributionFrozen)
+        publishedKeys.update(name,
+          publishedKeys.getOrElse(name, Set.empty) ++
+            (CacheRegistry.sharedKeys -- before))
+      else if (!completedOnce.contains(name)) {
+        // First completed attempt of a query that failed BOTH passes:
+        // the only key observation we will ever get for it — but it may
+        // have rebuilt ABSENT upstream family frames whose owner simply
+        // wasn't retried. Attributing those would let this query's NEXT
+        // retry release them, over-timing any later retry that only
+        // READS them. A rebuilt key whose FAMILY (the slug before the
+        // first ':' — d4scored, p2verdicts, …) some other query already
+        // owns goes to that owner, exactly as the normal pass would
+        // attribute it — attribution stays retry-order-independent even
+        // when two failed queries race to rebuild the same absent
+        // family frame. Only keys with no family owner anywhere stick
+        // to this query.
+        val owned = publishedKeys.iterator
+          .collect { case (n, ks) if n != name => ks }
+          .foldLeft(Set.empty[String])(_ ++ _)
+        def family(k: String) = k.takeWhile(_ != ':')
+        val ownerByFamily = publishedKeys.iterator
+          .collect { case (n, ks) if n != name =>
+            ks.iterator.map(k => family(k) -> n) }
+          .flatten.toMap
+        val fresh = CacheRegistry.sharedKeys -- before -- owned
+        val (toOwner, toSelf) =
+          fresh.partition(k => ownerByFamily.contains(family(k)))
+        toOwner.foreach { k =>
+          val o = ownerByFamily(family(k))
+          publishedKeys.update(o, publishedKeys(o) + k)
         }
-        if (ok) completedOnce += name
-        // release operator-internal caches so storage memory from one query
-        // never skews the next query's timing
-        CacheRegistry.releaseAll()
+        publishedKeys.update(name,
+          publishedKeys.getOrElse(name, Set.empty) ++ toSelf)
       }
+      if (!sec.isInfinite) completedOnce += name
+      sec
     }
     val sorted = SparkEntry.queries.toSeq.sortBy(_._1)
     // Shared keyed caches (the d4 pair list / d6 labels reused by d6, d7

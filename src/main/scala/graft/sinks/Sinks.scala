@@ -98,18 +98,39 @@ object Sinks {
     * Must run with the override conf UNSET (it reads the parquet dirs
     * through Tables — with the conf live, an overwrite would read a
     * table into itself).
+    *
+    * `db` is rebuilt from scratch: dropped from the catalog, and its
+    * warehouse directory deleted. The directory outlives the in-memory
+    * catalog, so in a fresh JVM an "overwrite" is really a CREATE that
+    * dies on the stale LOCATION.
     */
   def writeBucketedFacts(spark: org.apache.spark.sql.SparkSession,
                          dir: String, db: String = "graft_bucketed",
                          buckets: Int = 32,
                          tables: Seq[String] =
                            Seq("lineitem", "orders", "events")): Unit = {
+    // The wipe below is recursive: a name holding '/' or '..' would walk
+    // outside the warehouse. Require a bare identifier before any path or
+    // SQL is built from it.
+    require(db.matches("[A-Za-z0-9_]+"),
+      s"the bucketed database must be a bare identifier ([A-Za-z0-9_]+), got '$db'")
     require(spark.conf.get("spark.graft.bucketedDb", "").isEmpty,
       "unset spark.graft.bucketedDb before writeBucketedFacts — the " +
         "override would make the overwrite read a table into itself")
     val unknown = tables.toSet -- Set("lineitem", "orders", "events")
     require(unknown.isEmpty, s"unknown fact tables: ${unknown.mkString(",")}")
-    spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
+    spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
+    // Spark stores unquoted db names lowercased: <warehouse>/<lowercase>.db
+    val wh = java.nio.file.Paths.get(
+      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"),
+      s"${db.toLowerCase(java.util.Locale.ROOT)}.db")
+    if (java.nio.file.Files.exists(wh)) {
+      val walk = java.nio.file.Files.walk(wh)
+      try walk.sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => java.nio.file.Files.delete(p))
+      finally walk.close()
+    }
+    spark.sql(s"CREATE DATABASE $db")
     if (tables.contains("lineitem"))
       graft.Tables.lineitem(spark, dir).write.mode("overwrite")
         .bucketBy(buckets, "l_orderkey").sortBy("l_orderkey")

@@ -10,7 +10,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = args.drop(1)
-    // extra confs: SPARK_GRAFT_CONF="k1=v1,k2=v2" (the BenchSome knob) —
+    // extra confs: SPARK_GRAFT_CONF="k1=v1,k2=v2" (as ScalingCurve) —
     // e.g. autoBroadcastJoinThreshold=-1 to dump the forced-shuffle plan
     val spark = GraftSession.local(cpus = 4,
       conf = ("spark.sql.adaptive.enabled" -> "false") +:

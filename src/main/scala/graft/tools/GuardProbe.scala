@@ -7,9 +7,9 @@ import graft.operators.Dedup
 
 /** Reports whether the scale guards would ACTIVATE at a given data dir:
   * the d2 LSH bucket-cap (overfull band buckets dropped by broadcast
-  * anti-join) and the d5 hot-label sub-bucketing cap. The scale-correctness
-  * harness (tools/check_scale.sh) runs this so the artifact can assert
-  * activation counts rather than asserting the guards held by faith.
+  * anti-join) and the d5 hot-label sub-bucketing cap, so a scale check can
+  * assert activation counts rather than assume the guards held. Run it by
+  * hand on a MakeScale slice; no script runs it.
   *
   *   sbt "runMain graft.tools.GuardProbe /tmp/scale10 2000,500,200,100"
   */

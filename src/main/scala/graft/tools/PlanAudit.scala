@@ -71,17 +71,6 @@ object PlanAudit {
     sb ++= "catalog tables, same operator code (Tables override).\n\n"
     sb ++= "| query | parquet | bucketed |\n| --- | --- | --- |\n"
     try {
-      // a fresh derby metastore doesn't know tables a PREVIOUS audit left
-      // in the managed warehouse, so saveAsTable dies on the stale
-      // LOCATION — wipe the db dir first (idempotent re-runs)
-      val wh = Paths.get(spark.conf.get(
-        "spark.sql.warehouse.dir").stripPrefix("file:"), "graft_plan_bkt.db")
-      if (Files.exists(wh)) {
-        val walk = Files.walk(wh)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
-        finally walk.close()
-      }
       // only the two facts the compared queries join — skipping the
       // events rewrite keeps the audit cheap
       graft.sinks.Sinks.writeBucketedFacts(spark, dir, "graft_plan_bkt", 4,

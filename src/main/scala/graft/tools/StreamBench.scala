@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.streaming.StreamOps
 
@@ -13,7 +13,8 @@ import graft.streaming.StreamOps
   * throughput. The events table is replicated (disjoint event_id ranges) so
   * per-micro-batch launch overhead amortizes into a sustained rate.
   * Usage: runMain graft.tools.StreamBench [sfDir] [chunks] [replicas] [names...]
-  * (extra args = only run ops whose name is listed — the BenchSome pattern)
+  * (extra args = only run the rows listed; a name that matches no row
+  * fails the run with exit 2)
   */
 object StreamBench {
 
@@ -48,9 +49,8 @@ object StreamBench {
     // them to state volume, not core count — every extra partition is an
     // extra store snapshot+commit per micro-batch (2-3x throughput at 8 vs
     // 32 here). Scan parallelism still uses all cores via file splits.
-    val stateParts = sys.env.getOrElse("SPARK_GRAFT_STATE_PARTS", "8")
     val spark = graft.GraftSession.local(
-      conf = Seq("spark.sql.shuffle.partitions" -> stateParts))
+      conf = Seq("spark.sql.shuffle.partitions" -> "8"))
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
@@ -74,72 +74,70 @@ object StreamBench {
     def stream(): DataFrame = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(in)
 
-    def run(name: String, out: DataFrame): (String, Double) = {
-      val ckpt = s"/tmp/graft_stream_ckpt/$name-${System.nanoTime()}"
-      val t0 = System.nanoTime()
-      val q = out.writeStream.format("noop")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .start()
-      q.awaitTermination()
-      val sec = (System.nanoTime() - t0) / 1e9
-      name -> n / sec
-    }
+    // Every row's name, selected or not: a listed name outside it is a typo.
+    val rows = scala.collection.mutable.Set.empty[String]
 
-    // best of 2 runs per op (see Bench.scala on sandbox thread freezes)
-    def best(name: String, mk: () => DataFrame): Option[(String, Double)] = {
-      if (only.nonEmpty && !only(name)) return None
-      val r = Seq(run(name, mk()), run(name, mk())).maxBy(_._2)
-      println(f"[stream-bench] $name: ${r._2}%.0f events/sec")
-      Some(r)
+    /** The best rate of `runs` runs of one row (see Bench.scala on sandbox
+      * thread freezes): `n` units over the wall time from building and
+      * starting the query (`start` gets a fresh checkpoint dir) until it
+      * terminates. `n` is evaluated only for a selected row, once, before
+      * the first run, so a row whose staging sits behind `n` (a lazy
+      * (input, size) pair) stages only when it runs, and untimed.
+      */
+    def best(name: String, n: => Long, unit: String, runs: Int = 2)(
+        start: String => StreamingQuery): Option[(String, Double)] = {
+      rows += name
+      if (only.nonEmpty && !only(name)) None else {
+        val units = n
+        val rate = Seq.fill(runs) {
+          val ckpt = s"/tmp/graft_stream_ckpt/$name-${System.nanoTime()}"
+          val t0 = System.nanoTime()
+          start(ckpt).awaitTermination()
+          units / ((System.nanoTime() - t0) / 1e9)
+        }.max
+        println(f"[stream-bench] $name: $rate%.0f $unit/sec ($units $unit)")
+        Some(name -> rate)
+      }
     }
+    // the common row: an operator's frame into the noop sink
+    def bestNoop(name: String, units: => Long = n, unit: String = "events")(
+        out: => DataFrame) =
+      best(name, units, unit)(ckpt => out.writeStream.format("noop")
+        .trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", ckpt).start())
 
     val results = Seq(
-      best("radar_stateless", () => StreamOps.speedRadar(stream())),
-      best("daily_window", () => StreamOps.congestionDaily(stream())),
-      best("session_window", () => StreamOps.sessionWindows(stream())),
-      best("dedup_watermark", () => StreamOps.dedupStream(stream())),
-      best("accident_runs_fmgws", () =>
+      bestNoop("radar_stateless")(StreamOps.speedRadar(stream())),
+      bestNoop("daily_window")(StreamOps.congestionDaily(stream())),
+      bestNoop("session_window")(StreamOps.sessionWindows(stream())),
+      bestNoop("dedup_watermark")(StreamOps.dedupStream(stream())),
+      bestNoop("accident_runs_fmgws")(
         StreamOps.accidentRuns(spark,
           stream().as[StreamOps.Event], emitPerReport = false).toDF()),
-      best("interval_join", () => {
-        val s = stream()
-        StreamOps.purchaseAttribution(s, stream())
-      }),
-      best("interval_join_outer", () => {
-        val s = stream()
-        StreamOps.purchaseAttributionOuter(s, stream())
-      }),
-      best("psi_drift_window", () => StreamOps.psiDriftStream(stream(),
+      bestNoop("interval_join")(
+        StreamOps.purchaseAttribution(stream(), stream())),
+      bestNoop("interval_join_outer")(
+        StreamOps.purchaseAttributionOuter(stream(), stream())),
+      bestNoop("psi_drift_window")(StreamOps.psiDriftStream(stream(),
         StreamOps.referenceHistogram(base))),
-      best("ks_drift_window", () => StreamOps.ksDriftStream(stream(),
+      bestNoop("ks_drift_window")(StreamOps.ksDriftStream(stream(),
         StreamOps.referenceHistogram(base))),
-      best("chi2_drift_window", () => StreamOps.chi2DriftStream(stream(),
+      bestNoop("chi2_drift_window")(StreamOps.chi2DriftStream(stream(),
         StreamOps.referenceHistogram(base))))
 
     // cdc2 twin: orders-shaped events through the foreachBatch MERGE loop;
     // the measured rate pays the full per-batch apply INCLUDING the state
     // localCheckpoint, i.e. the upsert write amplification a daily-ingest
     // dimension actually sustains. scd2ApplyStream returns a writer (it
-    // owns the foreachBatch sink), so it can't go through run()'s noop.
-    val scd2 = if (only.nonEmpty && !only("scd2_apply_fb")) None else Some {
-      def once(): (String, Double) = {
-        val state = new StreamOps.Scd2State(spark)
-        val ckpt = s"/tmp/graft_stream_ckpt/scd2-${System.nanoTime()}"
-        val t0 = System.nanoTime()
-        val q = StreamOps.scd2ApplyStream(
-          stream().select(col("event_id").as("o_orderkey"),
-            col("user_id").as("o_custkey"), col("value").as("o_totalprice"),
-            col("ts").as("o_orderdate")), state)
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .start()
-        q.awaitTermination()
-        "scd2_apply_fb" -> n / ((System.nanoTime() - t0) / 1e9)
-      }
-      val r = Seq(once(), once()).maxBy(_._2)
-      println(f"[stream-bench] ${r._1}: ${r._2}%.0f events/sec")
-      r
+    // owns the foreachBatch sink), so it can't go through the noop sink.
+    val scd2 = best("scd2_apply_fb", n, "events") { ckpt =>
+      StreamOps.scd2ApplyStream(
+        stream().select(col("event_id").as("o_orderkey"),
+          col("user_id").as("o_custkey"), col("value").as("o_totalprice"),
+          col("ts").as("o_orderdate")), new StreamOps.Scd2State(spark))
+        .trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", ckpt)
+        .start()
     }
 
     // The 9-token synthetic doc shape shared by every text-twin bench row
@@ -159,30 +157,23 @@ object StreamBench {
 
     // c1 twin: events re-shaped into 9-token synthetic docs; the benchmark
     // side is the shingle set of every 10th doc (a ~10% true-hit rate), a
-    // static frame materialized ONCE and broadcast into each micro-batch's
-    // stateless join — the measured rate pays the full per-batch verdict
-    // (shingle kernel + broadcast join + per-doc rollup + noop write).
-    val guard = if (only.nonEmpty && !only("contamination_guard_fb")) None else Some {
-      val bench = textify(base.withColumn("event_id", col("event_id")))
-        .filter(pmod(col("doc_id"), lit(10)) === 0)
-        .select(explode(array_distinct(
-          graft.functions.Sketches.shingleHash64(col("text"), 8))).as("h"))
-        .distinct().localCheckpoint()
-      def once(): (String, Double) = {
-        val ckpt = s"/tmp/graft_stream_ckpt/guard-${System.nanoTime()}"
-        val t0 = System.nanoTime()
-        val q = StreamOps.contaminationGuardStream(textify(stream()), bench) {
-          (verdicts, _) =>
-            verdicts.write.format("noop").mode("overwrite").save()
-        }.trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .start()
-        q.awaitTermination()
-        "contamination_guard_fb" -> n / ((System.nanoTime() - t0) / 1e9)
-      }
-      val r = Seq(once(), once()).maxBy(_._2)
-      println(f"[stream-bench] ${r._1}: ${r._2}%.0f events/sec")
-      r
+    // static frame materialized ONCE, untimed (best evaluates the pair's
+    // count before the first run), and broadcast into each micro-batch's
+    // stateless join — the measured rate pays the full
+    // per-batch verdict (shingle kernel + broadcast join + per-doc rollup
+    // + noop write).
+    lazy val guardBench = (textify(base)
+      .filter(pmod(col("doc_id"), lit(10)) === 0)
+      .select(explode(array_distinct(
+        graft.functions.Sketches.shingleHash64(col("text"), 8))).as("h"))
+      .distinct().localCheckpoint(), n)
+    val guard = best("contamination_guard_fb", guardBench._2, "events") { ckpt =>
+      StreamOps.contaminationGuardStream(textify(stream()), guardBench._1) {
+        (verdicts, _) =>
+          verdicts.write.format("noop").mode("overwrite").save()
+      }.trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", ckpt)
+        .start()
     }
 
     // cls1 twin: the trained-classifier scoring projection over the same
@@ -190,25 +181,20 @@ object StreamBench {
     // quantized dot + verdict), the ingest-time quality gate's rate. The
     // weight values don't affect the per-row cost, so a deterministic
     // synthetic vector stands in for a trained one.
-    val qualityRow = {
-      val wq = Array.tabulate(65)(j => ((j * 2654435761L) % 2000001L) - 1000000L)
-      best("quality_score_stateless", () =>
-        StreamOps.qualityScoreStream(textify(stream()), wq))
-    }
+    val wq = Array.tabulate(65)(j => ((j * 2654435761L) % 2000001L) - 1000000L)
+    val qualityRow = bestNoop("quality_score_stateless")(
+      StreamOps.qualityScoreStream(textify(stream()), wq))
 
     // the ingest-time Pareto acceptance gate: the same scoring projection
     // plus the LUT verdict — measures the marginal cost of the acceptance
     // rule over plain scoring
-    val paretoRow = {
-      val wq = Array.tabulate(65)(j => ((j * 2654435761L) % 2000001L) - 1000000L)
-      best("pareto_filter_stateless", () =>
-        StreamOps.paretoFilterStream(textify(stream()), wq))
-    }
+    val paretoRow = bestNoop("pareto_filter_stateless")(
+      StreamOps.paretoFilterStream(textify(stream()), wq))
 
     // x41's ingest twin: page synthesis + the full tag-walk audit per
     // event — the parse dominates, which is the honest rate for an
     // extraction-at-ingest stage
-    val htmlRow = best("html_extract_stateless", () =>
+    val htmlRow = bestNoop("html_extract_stateless")(
       StreamOps.htmlExtractStream(spark,
         textify(stream()).as[(Long, java.sql.Timestamp, String)]
           .map { case (id, ts, text) =>
@@ -219,7 +205,7 @@ object StreamBench {
     // canonical key (watermark-bounded state, one row per live resource);
     // synthetic URLs reuse the x43 identity/variance split so real dedup
     // state builds up (one canonical resource per 100-id bucket)
-    val frontierRow = best("url_frontier_dedup", () =>
+    val frontierRow = bestNoop("url_frontier_dedup")(
       StreamOps.urlFrontierStream(spark,
         stream().select(col("event_id"), col("ts"))
           .as[(Long, java.sql.Timestamp)]
@@ -228,7 +214,7 @@ object StreamBench {
           }))
 
     // x42's ingest twin: one stateless codegen projection per batch
-    val blockRow = best("blocklist_stateless", () =>
+    val blockRow = bestNoop("blocklist_stateless")(
       StreamOps.blocklistFilterStream(
         textify(stream()).withColumn("source",
           concat(lit("src"), pmod(col("doc_id"), lit(20))))))
@@ -237,7 +223,7 @@ object StreamBench {
     // extraction-yield + blocklist per fetch event — the composed
     // per-page gate; page synthesis reuses x41's, URLs x43's, so the
     // rate carries the full parse AND the frontier kernels
-    val ingestRow = best("web_ingest_gate_stateless", () =>
+    val ingestRow = bestNoop("web_ingest_gate_stateless")(
       StreamOps.webIngestGateStream(spark,
         textify(stream()).as[(Long, java.sql.Timestamp, String)]
           .map { case (id, ts, text) =>
@@ -296,40 +282,37 @@ object StreamBench {
     }
     def funnelRowFor(name: String, incremental: Boolean,
                      shardIdExpr: Option[String], runs: Int)
-        : Option[Seq[(String, Double)]] =
-      if (only.nonEmpty && !only(name)) None else Some {
-        val (warcDir, nDocs) = stageFunnel(name, shardIdExpr)
-        def once(): ((String, Double), (String, Double)) = {
-          val state = new StreamOps.WebFunnelState(spark, sfDir,
-            incremental = incremental)
-          val ckpt = s"/tmp/graft_stream_ckpt/funnel-${System.nanoTime()}"
-          val t0 = System.nanoTime()
-          val q = StreamOps.webPipelineVerdictStream(
-              graft.sources.Warc.warcRecordFileStream(spark, warcDir), state)
-            .trigger(Trigger.AvailableNow())
-            .option("checkpointLocation", ckpt).start()
-          q.awaitTermination()
+        : Seq[(String, Double)] = {
+      lazy val staged = stageFunnel(name, shardIdExpr)
+      val states = scala.collection.mutable.ArrayBuffer
+        .empty[StreamOps.WebFunnelState]
+      // rate: best of N (the stall-band discipline)
+      best(name, staged._2, "docs", runs) { ckpt =>
+        val state = new StreamOps.WebFunnelState(spark, sfDir,
+          incremental = incremental)
+        states += state
+        StreamOps.webPipelineVerdictStream(
+            graft.sources.Warc.warcRecordFileStream(spark, staged._1), state)
+          .trigger(Trigger.AvailableNow())
+          .option("checkpointLocation", ckpt).start()
+      }.toSeq ++ states.headOption.map { _ =>
+        // the gate-rows slope is a function of the landed data, not the
+        // run — repeat runs must agree, and the require makes drift loud
+        val slopes = states.toSeq.map { state =>
           val got = state.verdicts.count()
-          require(got == nDocs, s"funnel stream gated $got of $nDocs docs")
+          require(got == staged._2,
+            s"funnel stream gated $got of ${staged._2} docs")
           val gateRows = state.batchGateRows.toSeq
           require(gateRows.length >= 6, s"need >=6 batches for the slope, " +
             s"got ${gateRows.length}")
-          val lastFirst = 100.0 * gateRows.takeRight(3).sum.toDouble /
-            gateRows.take(3).sum
-          ((name -> nDocs / ((System.nanoTime() - t0) / 1e9)),
-            (s"${name}_gaterows_lastfirst_pct" -> lastFirst))
+          100.0 * gateRows.takeRight(3).sum.toDouble / gateRows.take(3).sum
         }
-        // rate: best of N (the stall-band discipline); the gate-rows
-        // slope is a function of the landed data, not the run — repeat
-        // runs must agree, and the require makes drift loud
-        val all = Seq.fill(runs)(once())
-        require(all.map(_._2).distinct.size == 1,
-          s"gate-rows slope must be deterministic: ${all.map(_._2)}")
-        val r = all.map(_._1).maxBy(_._2)
-        println(f"[stream-bench] ${r._1}: ${r._2}%.0f docs/sec " +
-          f"($nDocs docs); ${all.head._2._1}: ${all.head._2._2}%.0f%%")
-        Seq(r, all.head._2)
+        require(slopes.distinct.size == 1,
+          s"gate-rows slope must be deterministic: $slopes")
+        println(f"[stream-bench] ${name}_gaterows_lastfirst_pct: ${slopes.head}%.0f%%")
+        s"${name}_gaterows_lastfirst_pct" -> slopes.head
       }
+    }
     // the crawl-queue bucket: URL keyspace (doc_id%100) split across
     // the landing containers
     val queueExpr = Some(s"(doc_id % 100) div ${math.max(1, 100 / nShards)}")
@@ -342,7 +325,7 @@ object StreamBench {
       // recompute and is strictly dominated
       funnelRowFor("web_funnel_fb_striped", incremental = true, None,
         runs = 1))
-      .flatten.flatten
+      .flatten
 
     // transformWithState ops require the RocksDB provider. firstSeenTws is
     // excluded: its ProcessingTime time mode keeps shouldRunAnotherBatch
@@ -350,15 +333,15 @@ object StreamBench {
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val twsResults = Seq(
-      best("accident_runs_tws", () =>
+      bestNoop("accident_runs_tws")(
         StreamOps.accidentRunsTws(spark, stream().as[StreamOps.Event]).toDF()),
-      best("sessionize_tws_timers", () =>
+      bestNoop("sessionize_tws_timers")(
         StreamOps.sessionizeTws(spark, stream().as[StreamOps.Event]).toDF()),
-      best("windowed_counts_tws", () =>
+      bestNoop("windowed_counts_tws")(
         StreamOps.windowedCountsTws(spark, stream().as[StreamOps.Event]).toDF()),
-      best("heavy_hitters_tws", () =>
+      bestNoop("heavy_hitters_tws")(
         StreamOps.heavyHittersStream(spark, stream().as[StreamOps.Event]).toDF()),
-      best("pack_sequences_tws", () =>
+      bestNoop("pack_sequences_tws")(
         StreamOps.packSequencesStream(spark,
           stream().select(col("event_id").as("doc_id"), col("ts"),
             col("event_type").as("source"),
@@ -367,7 +350,7 @@ object StreamBench {
       // d2 twin: events re-shaped into small synthetic docs (mostly-unique
       // token tuples, occasional collisions -> real pair emissions); TTL
       // ZERO selects the EventTime/no-TTL mode AvailableNow can terminate
-      best("minhash_lsh_tws", () =>
+      bestNoop("minhash_lsh_tws")(
         StreamOps.minhashLshDedupStream(spark,
           stream().select(col("event_id").as("doc_id"), col("ts"),
             concat_ws(" ", col("event_type"),
@@ -381,7 +364,7 @@ object StreamBench {
       // 90% seeds state without pairing, the 10% feed probes it, so the
       // measured rate is the production ingest shape (state writes
       // dominated by seeds, scoring work by feed bucket occupancy)
-      best("incremental_dedup_tws", () =>
+      bestNoop("incremental_dedup_tws")(
         StreamOps.incrementalDedupStream(spark,
           stream().select(col("event_id").as("doc_id"), col("ts"),
             concat_ws(" ", col("event_type"),
@@ -397,7 +380,7 @@ object StreamBench {
       // fan-out + standing-index compare — with the same 10%-new split
       // and bucket cap as the d8 row (tiny near-flat images collide
       // heavily, so the cap is load-bearing here too)
-      best("media_neardup_tws", () =>
+      bestNoop("media_neardup_tws")(
         StreamOps.mediaNearDupStream(spark,
           stream().select(col("event_id"), col("ts"), col("user_id"),
               col("value"), (pmod(col("event_id"), lit(10)) === 0).as("is_new"))
@@ -469,84 +452,54 @@ object StreamBench {
         .option("maxFilesPerTrigger", 1).parquet(path)
         .as[StreamOps.WarcChunk]
 
-    def warcReassembleRow(name: String, chunkBytes: Int): Option[(String, Double)] =
-      if (only.nonEmpty && !only(name)) None else Some {
-        val (warcIn, nRecs) = stagedWarcChunks(chunkBytes)
-        def once(): (String, Double) = {
-          val ckpt = s"/tmp/graft_stream_ckpt/$name-${System.nanoTime()}"
-          val t0 = System.nanoTime()
-          val q = StreamOps.warcRecordStream(spark, warcChunkStream(warcIn))
-            .toDF()
-            .writeStream.format("noop").trigger(Trigger.AvailableNow())
-            .option("checkpointLocation", ckpt).start()
-          q.awaitTermination()
-          name -> nRecs / ((System.nanoTime() - t0) / 1e9)
-        }
-        val r = Seq(once(), once()).maxBy(_._2)
-        println(f"[stream-bench] ${r._1}: ${r._2}%.0f records/sec ($nRecs records)")
-        r
-      }
+    // one row per record stream over staged chunks
+    def warcRow(name: String, chunkBytes: Int, gz: Boolean = false)(
+        records: org.apache.spark.sql.Dataset[StreamOps.WarcChunk] =>
+          org.apache.spark.sql.Dataset[_]) = {
+      lazy val staged = stagedWarcChunks(chunkBytes, gz)
+      bestNoop(name, staged._2, "records")(
+        records(warcChunkStream(staged._1)).toDF())
+    }
     // w1 twin: the measured rate pays reassembly + record framing +
     // HTTP parse + body CRC per record. Reported per RECORD, not chunk.
-    val warcRow = warcReassembleRow("warc_reassemble_tws", 32 * 1024)
+    val warcReassemble = warcRow("warc_reassemble_tws", 32 * 1024)(
+      StreamOps.warcRecordStream(spark, _))
     // the SMALL-CHUNK stress: 1 KiB chunks mean ~75 chunks straddle a
     // typical container record instead of ~2 — the row that would
     // collapse quadratically if reassembly re-parsed the pending prefix
     // per chunk (it holds the per-record rate within a small constant
     // of the 32 KiB row because of the recordNeed resume hint)
-    val warcSmallRow = warcReassembleRow("warc_reassemble_1k_tws", 1024)
+    val warcSmall = warcRow("warc_reassemble_1k_tws", 1024)(
+      StreamOps.warcRecordStream(spark, _))
 
     // w4 twin: the same record stream over the .warc.gz TRANSPORT —
     // per-record gzip members split into 32 KiB chunks; the rate pays
     // member-completion detection (one inflate attempt per batch per
     // container), the verified inflate, and then the identical plain
     // framing + HTTP parse + digest verify + body CRC per record.
-    val warcGzRow = if (only.nonEmpty && !only("warc_gz_reassemble_tws")) None
-      else Some {
-        val (warcIn, nRecs) = stagedWarcChunks(32 * 1024, gz = true)
-        def once(): (String, Double) = {
-          val ckpt = s"/tmp/graft_stream_ckpt/warcgz-${System.nanoTime()}"
-          val t0 = System.nanoTime()
-          val q = StreamOps.warcGzRecordStream(spark, warcChunkStream(warcIn))
-            .toDF()
-            .writeStream.format("noop").trigger(Trigger.AvailableNow())
-            .option("checkpointLocation", ckpt).start()
-          q.awaitTermination()
-          "warc_gz_reassemble_tws" -> nRecs / ((System.nanoTime() - t0) / 1e9)
-        }
-        val r = Seq(once(), once()).maxBy(_._2)
-        println(f"[stream-bench] ${r._1}: ${r._2}%.0f records/sec ($nRecs records)")
-        r
-      }
+    val warcGz = warcRow("warc_gz_reassemble_tws", 32 * 1024, gz = true)(
+      StreamOps.warcGzRecordStream(spark, _))
 
     // w2 twin: the same chunk stream through the WET-conversion
     // processor — reassembly + framing + HTTP parse + x41 extraction +
     // WET re-frame + re-parse + payload CRC per record: the full
     // archive-conversion job as one stateful stream.
-    val wetRow = if (only.nonEmpty && !only("wet_convert_tws")) None else Some {
-      val (warcIn, nRecs) = stagedWarcChunks(32 * 1024)
-      def once(): (String, Double) = {
-        val ckpt = s"/tmp/graft_stream_ckpt/wet-${System.nanoTime()}"
-        val t0 = System.nanoTime()
-        val q = StreamOps.wetRecordStream(spark, warcChunkStream(warcIn))
-          .toDF()
-          .writeStream.format("noop").trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt).start()
-        q.awaitTermination()
-        "wet_convert_tws" -> nRecs / ((System.nanoTime() - t0) / 1e9)
-      }
-      val r = Seq(once(), once()).maxBy(_._2)
-      println(f"[stream-bench] ${r._1}: ${r._2}%.0f records/sec ($nRecs records)")
-      r
-    }
+    val wet = warcRow("wet_convert_tws", 32 * 1024)(
+      StreamOps.wetRecordStream(spark, _))
     spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
 
     val qs = (results.flatten ++
       Seq(scd2, guard, qualityRow, paretoRow, htmlRow, blockRow,
-        frontierRow, ingestRow, warcRow,
-        warcSmallRow, warcGzRow, wetRow).flatten ++ funnelRows ++
+        frontierRow, ingestRow, warcReassemble,
+        warcSmall, warcGz, wet).flatten ++ funnelRows ++
       twsResults.flatten).map { case (k, v) => "\"" + k + "\":" + f"$v%.0f" }
       .mkString("{", ",", "}")
+    val unknown = only -- rows
+    if (unknown.nonEmpty) {
+      System.err.println("[stream-bench] no row named: " +
+        unknown.toSeq.sorted.mkString(", "))
+      sys.exit(2)
+    }
     println(s"""{"metric":"stream_events_per_sec","rows":$n,"ops":$qs,"sf":"$sfDir"}""")
     spark.stop()
   }

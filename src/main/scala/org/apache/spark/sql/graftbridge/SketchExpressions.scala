@@ -906,20 +906,19 @@ object ShingleHitStarts {
       p += 1
     }
     if (nTok < k) return new GenericArrayData(Array.emptyIntArray)
-    val out = new java.util.ArrayList[Integer]()
-    var i = 0
+    // at most one hit per shingle: fill a primitive buffer, trim once
     val last = nTok - k
+    val out = new Array[Int](last + 1)
+    var n = 0
+    var i = 0
     while (i <= last) {
       val from = starts(i)
       val to = if (i + k < nTok) starts(i + k) - 1 else nb
       val h = XXH64.hashUnsafeBytes(base, off + from, to - from, 42L)
-      if (java.util.Arrays.binarySearch(sorted, h) >= 0) out.add(i)
+      if (java.util.Arrays.binarySearch(sorted, h) >= 0) { out(n) = i; n += 1 }
       i += 1
     }
-    val arr = new Array[Int](out.size())
-    var j = 0
-    while (j < arr.length) { arr(j) = out.get(j); j += 1 }
-    new GenericArrayData(arr)
+    new GenericArrayData(if (n == out.length) out else java.util.Arrays.copyOf(out, n))
   }
 }
 

@@ -17,27 +17,32 @@ class LinearRoadSpec extends SparkSpec {
     f.toString
   }
 
-  test("the reference's own accident_test_data.csv produces its expected reports") {
-    // 8 reports of vid 3 at pos 139158, 30 s apart from t=870: the sliding
-    // countWindow(4,1) emits from the 4th report on -> 5 rows, run start 870
-    val cars = EventSources.carDataCsv(spark,
-      "/root/reference/VehicleTelematics/input/accident_test_data.csv")
-    val got = LinearRoad.accidents(cars).orderBy("time2").collect()
+  private val referenceInput = "/root/reference/VehicleTelematics/input"
+
+  /** The reference's accident scenario: 8 reports of vid 3 at pos 139158,
+    * 30 s apart from t=870. The sliding countWindow(4,1) emits from the 4th
+    * report on -> 5 rows, run start 870.
+    */
+  private def checkAccidentScenario(path: String): Unit = {
+    val got = LinearRoad.accidents(EventSources.carDataCsv(spark, path))
+      .orderBy("time2").collect()
     assert(got.length == 5)
     assert(got.forall(_.getAs[Int]("time1") == 870))
     assert(got.map(_.getAs[Int]("time2")).toSeq == Seq(960, 990, 1020, 1050, 1080))
     assert(got.forall(r => r.getAs[Int]("vid") == 3 && r.getAs[Int]("pos") == 139158))
   }
 
-  test("the reference's own data_small.csv runs all three reports consistently") {
+  /** All three reports over one input, each against an independent
+    * expectation: fines = the rows at >= 90, accidents = a Scala fold over
+    * each vid's time-ordered reports, emitting from the 4th consecutive
+    * same-pos on. Returns (fines, accidents).
+    */
+  private def checkAllReports(path: String): (Int, Long) = {
     import org.apache.spark.sql.functions.col
-    val cars = EventSources.carDataCsv(spark,
-      "/root/reference/VehicleTelematics/input/data_small.csv")
+    val cars = EventSources.carDataCsv(spark, path)
     val fines = LinearRoad.speedFines(cars).collect()
     assert(fines.length == cars.filter(col("spd") >= 90).count().toInt)
     assert(fines.forall(_.length == 6)) // (time, vid, xway, seg, dir, spd)
-    // independent accident expectation: a Scala fold over each vid's
-    // time-ordered reports, emitting from the 4th consecutive same-pos on
     val expected = cars.select("vid", "time", "pos").collect()
       .groupBy(_.getAs[Int]("vid")).values.map { rows =>
         val sorted = rows.sortBy(_.getAs[Int]("time")).map(_.getAs[Int]("pos"))
@@ -47,8 +52,45 @@ class LinearRoadSpec extends SparkSpec {
             (emits + (if (len >= 4) 1 else 0), Some(pos), len)
         }._1
       }.sum
-    assert(LinearRoad.accidents(cars).count() == expected)
+    val accidents = LinearRoad.accidents(cars).count()
+    assert(accidents == expected)
     LinearRoad.avgSpeedFines(cars).collect() // runs; 52->56 pairs may be absent
+    (fines.length, accidents)
+  }
+
+  test("the reference's own accident_test_data.csv produces its expected reports") {
+    val path = s"$referenceInput/accident_test_data.csv"
+    assume(Files.exists(Paths.get(path)), s"reference input $path is absent")
+    checkAccidentScenario(path)
+  }
+
+  test("synthetic twin of the reference's accident scenario produces its expected reports") {
+    // synthetic: the scenario the reference's accident_test_data.csv
+    // states, written inline, not the reference's file
+    checkAccidentScenario(writeCsv(
+      (0 until 8).map(i => s"${870 + i * 30},3,0,0,1,0,26,139158")))
+  }
+
+  test("the reference's own data_small.csv runs all three reports consistently") {
+    val path = s"$referenceInput/data_small.csv"
+    assume(Files.exists(Paths.get(path)), s"reference input $path is absent")
+    checkAllReports(path)
+  }
+
+  test("synthetic mixed traffic runs all three reports consistently") {
+    // synthetic: three cars over 5 minutes, not the reference's file.
+    // vid 1 cruises eastbound at 95 then 80 mph through segs 50-57; vid 2
+    // stops at pos 200000 for 6 reports, moves, then stops again for 4;
+    // vid 3 drives westbound at 100 mph, once, between two slow reports
+    val rows =
+      (0 until 8).map(i => s"${i * 30},1,${if (i < 4) 95 else 80},0,0,0,${50 + i},${264000 + i * 5280}") ++
+      (0 until 6).map(i => s"${i * 30},2,0,1,2,0,37,200000") ++
+      Seq("180,2,30,1,2,0,37,200500") ++
+      (0 until 4).map(i => s"${210 + i * 30},2,0,1,2,0,37,200900") ++
+      Seq("0,3,40,2,1,1,56,300000", "30,3,100,2,1,1,55,299000",
+        "60,3,40,2,1,1,55,298000")
+    // 4 + 1 fines; vid 2's runs emit 3 (6 reports) + 1 (4 reports)
+    assert(checkAllReports(writeCsv(rows)) == (5, 4L))
   }
 
   test("speed fines keep >=90 with the reference's column projection") {
