@@ -65,12 +65,16 @@ object Tables {
     * of the file's vintage.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // The NTZ->TIMESTAMP cast below preserves micros-since-epoch ONLY in a
-    // UTC session; a non-UTC session would silently shift every event time.
-    // Every entry point already sets UTC — enforce it here so the loader
-    // carries its own precondition instead of trusting callers.
-    s.conf.set("spark.sql.session.timeZone", "UTC")
+    // The loader reads the session's settings and never writes them:
+    // GraftSession.local sets both. Without nanosAsLong Spark 4 refuses an
+    // INT64(NANOS) file, and the NTZ->TIMESTAMP cast below preserves
+    // micros-since-epoch ONLY in a UTC session — a non-UTC session would
+    // silently shift every event time.
+    require(s.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") == "true",
+      "Tables.events needs spark.sql.legacy.parquet.nanosAsLong=true")
+    val tz = s.conf.get("spark.sql.session.timeZone")
+    require(java.time.ZoneId.of(tz).normalized == java.time.ZoneOffset.UTC,
+      s"Tables.events needs spark.sql.session.timeZone=UTC, got '$tz'")
     val raw = table(s, d, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType => // nanos read as long

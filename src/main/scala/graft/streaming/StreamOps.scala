@@ -525,8 +525,7 @@ object StreamOps {
   }
 
   /** w1's streaming twin — stateful WARC record reassembly over an
-    * arbitrary-boundary chunk stream (`transformWithState`, the
-    * RunDetectProcessor discipline): per container, arriving chunks
+    * arbitrary-boundary chunk stream (`transformWithState`): per container, arriving chunks
     * append to the pending buffer, `Warc.parseWarcPrefix` drains every
     * COMPLETE record (the SAME Content-Length framing seam as batch —
     * a chunk boundary inside `\r\n\r\n` or the magic cannot mis-split),
@@ -1165,54 +1164,6 @@ object StreamOps {
           cur.foreach(state.update)
           out.result().iterator
       }
-  }
-
-  /** The transformWithState form of run detection — Spark 4's arbitrary
-    * stateful API (RocksDB-backed typed ValueState, per-state TTL, timers).
-    * Break-emission semantics, identical to
-    * `accidentRuns(emitPerReport = false)`; requires
-    * `spark.sql.streaming.stateStore.providerClass` =
-    * RocksDBStateStoreProvider on the running query.
-    */
-  class RunDetectProcessor(minRun: Int)
-      extends StatefulProcessor[Long, Event, AccidentRun] {
-    @transient private var run: ValueState[RunState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      run = getHandle.getValueState[RunState](
-        "run", Encoders.product[RunState], TTLConfig.NONE)
-
-    override def handleInputRows(userId: Long, rows: Iterator[Event],
-                                 tv: TimerValues): Iterator[AccidentRun] = {
-      val sorted = rows.toSeq.sortBy(e => micros(e.ts))
-      var cur = if (run.exists()) Some(run.get()) else None
-      val out = Seq.newBuilder[AccidentRun]
-      sorted.foreach { e =>
-        val us = micros(e.ts)
-        cur match {
-          case Some(r) if r.eventType == e.event_type =>
-            cur = Some(r.copy(endUs = us, n = r.n + 1))
-          case Some(r) =>
-            if (r.n >= minRun)
-              out += AccidentRun(userId, r.eventType, r.startUs, r.endUs, r.n)
-            cur = Some(RunState(e.event_type, us, us, 1))
-          case None =>
-            cur = Some(RunState(e.event_type, us, us, 1))
-        }
-      }
-      cur.foreach(run.update)
-      out.result().iterator
-    }
-  }
-
-  /** accidentRuns on the transformWithState API (see RunDetectProcessor). */
-  def accidentRunsTws(spark: SparkSession, events: Dataset[Event],
-                      minRun: Int = 4): Dataset[AccidentRun] = {
-    import spark.implicits._
-    events
-      .groupByKey(_.user_id)
-      .transformWithState(new RunDetectProcessor(minRun),
-        TimeMode.None(), OutputMode.Append())
   }
 
   case class SessionAgg(startUs: Long, endUs: Long, n: Long, sum: Double)

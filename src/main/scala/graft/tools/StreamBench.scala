@@ -79,10 +79,11 @@ object StreamBench {
 
     /** The best rate of `runs` runs of one row (see Bench.scala on sandbox
       * thread freezes): `n` units over the wall time from building and
-      * starting the query (`start` gets a fresh checkpoint dir) until it
-      * terminates. `n` is evaluated only for a selected row, once, before
-      * the first run, so a row whose staging sits behind `n` (a lazy
-      * (input, size) pair) stages only when it runs, and untimed.
+      * starting the query (`start` gets a fresh checkpoint dir, deleted
+      * once the run ends) until it terminates. `n` is evaluated only for a
+      * selected row, once, before the first run, so a row whose staging
+      * sits behind `n` (a lazy (input, size) pair) stages only when it
+      * runs, and untimed.
       */
     def best(name: String, n: => Long, unit: String, runs: Int = 2)(
         start: String => StreamingQuery): Option[(String, Double)] = {
@@ -90,10 +91,14 @@ object StreamBench {
       if (only.nonEmpty && !only(name)) None else {
         val units = n
         val rate = Seq.fill(runs) {
-          val ckpt = s"/tmp/graft_stream_ckpt/$name-${System.nanoTime()}"
+          val ckpt = new org.apache.hadoop.fs.Path(
+            s"/tmp/graft_stream_ckpt/$name-${System.nanoTime()}")
           val t0 = System.nanoTime()
-          start(ckpt).awaitTermination()
-          units / ((System.nanoTime() - t0) / 1e9)
+          try {
+            start(ckpt.toString).awaitTermination()
+            units / ((System.nanoTime() - t0) / 1e9)
+          } finally ckpt.getFileSystem(spark.sparkContext.hadoopConfiguration)
+            .delete(ckpt, true)
         }.max
         println(f"[stream-bench] $name: $rate%.0f $unit/sec ($units $unit)")
         Some(name -> rate)
@@ -333,8 +338,6 @@ object StreamBench {
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val twsResults = Seq(
-      bestNoop("accident_runs_tws")(
-        StreamOps.accidentRunsTws(spark, stream().as[StreamOps.Event]).toDF()),
       bestNoop("sessionize_tws_timers")(
         StreamOps.sessionizeTws(spark, stream().as[StreamOps.Event]).toDF()),
       bestNoop("windowed_counts_tws")(

@@ -120,37 +120,6 @@ class StreamOpsSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("accident runs via transformWithState match flatMapGroupsWithState semantics") {
-    implicit val sqlCtx = spark.sqlContext
-    val prevProvider =
-      spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[Event]
-    val q = StreamOps.accidentRunsTws(spark, input.toDS())
-      .writeStream.format("memory").queryName("runs_tws_out")
-      .outputMode(OutputMode.Append).start()
-    try {
-      input.addData((1 to 2).map(i => ev(i, i, 1L, "click")))
-      q.processAllAvailable()
-      input.addData((3 to 5).map(i => ev(i, i, 1L, "click"))) // run now 5 long
-      q.processAllAvailable()
-      assert(spark.table("runs_tws_out").count() == 0, "open run not yet emitted")
-      input.addData(Seq(ev(6, 6, 1L, "view"))) // break the run
-      q.processAllAvailable()
-      val rows = spark.table("runs_tws_out").collect()
-      assert(rows.length == 1)
-      assert(rows.head.getAs[String]("event_type") == "click")
-      assert(rows.head.getAs[Long]("n_events") == 5L)
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
   private def withRocksDb[T](body: => T): T = {
     val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
@@ -384,11 +353,6 @@ class StreamOpsSpec extends SparkSpec {
   test("accident runs keep event time to the microsecond") {
     assert(outputOf[AccidentRun]("runs_us_out", OutputMode.Append)(
       StreamOps.accidentRuns(spark, _))(runOfFourThenBreak) == Seq(runOfFour))
-  }
-
-  test("accident runs via transformWithState keep event time to the microsecond") {
-    assert(withRocksDb(outputOf[AccidentRun]("runs_tws_us_out", OutputMode.Append)(
-      StreamOps.accidentRunsTws(spark, _))(runOfFourThenBreak)) == Seq(runOfFour))
   }
 
   test("sessionize via timers keeps event time to the microsecond") {
