@@ -1,7 +1,11 @@
 package graft
 
+import scala.collection.mutable
+
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated parquet tables (see TESTDATA.md).
   *
@@ -33,9 +37,56 @@ object Tables {
         s"spark.graft.bucketedDb='$db' but no such database exists — " +
           "run Sinks.writeBucketedFacts first or unset the conf")
       if (spark.catalog.tableExists(s"$db.$name")) spark.table(s"$db.$name")
-      else spark.read.parquet(s"$dir/$name.parquet")
-    } else spark.read.parquet(s"$dir/$name.parquet")
+      else parquet(spark, s"$dir/$name.parquet")
+    } else parquet(spark, s"$dir/$name.parquet")
   }
+
+  /** What an inferred schema depends on besides the session: every leaf
+    * file's (name, length, mtime) and the session's parquet settings.
+    */
+  private type Stamp = (Seq[(String, Long, Long)], Map[String, String])
+
+  /** Inferred parquet schemas per session: path -> (stamp, schema). Weak
+    * session keys, so a stopped session's entries go away with it; one
+    * entry per path, so a rewritten dir replaces its entry. Kept out of
+    * CacheRegistry, whose releases run after every query.
+    */
+  private val schemas =
+    new java.util.WeakHashMap[SparkSession, mutable.Map[String, (Stamp, StructType)]]()
+
+  /** `spark.read.parquet(path)` without its schema-inference job on
+    * repeat loads: the inferred schema is memoized per session and path,
+    * keyed on a listing fingerprint (a file-system call, not a Spark job)
+    * and on the parquet settings inference reads. A dir rewritten by Spark
+    * gets new part-file names, so it is always inferred again. A missing
+    * path goes straight to Spark, which raises its own PATH_NOT_FOUND.
+    */
+  private[graft] def parquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) spark.read.parquet(path)
+    else {
+      val stamp: Stamp = (leaves(fs, p).sorted, spark.conf.getAll.filter { case (k, _) =>
+        k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") ||
+          k == "spark.sql.caseSensitive"
+      })
+      val memo = schemas.synchronized(
+        schemas.computeIfAbsent(spark, _ => mutable.Map.empty[String, (Stamp, StructType)]))
+      val schema = memo.synchronized(memo.get(path)).collect { case (`stamp`, s) => s }
+        .getOrElse {
+          val s = spark.read.parquet(path).schema
+          memo.synchronized(memo(path) = (stamp, s))
+          s
+        }
+      spark.read.schema(schema).parquet(path)
+    }
+  }
+
+  private def leaves(fs: FileSystem, p: Path): Seq[(String, Long, Long)] =
+    fs.listStatus(p).toSeq.flatMap { s =>
+      if (s.isDirectory) leaves(fs, s.getPath)
+      else Seq((s.getPath.toString, s.getLen, s.getModificationTime))
+    }
 
   /** The substrate the session currently resolves tables against —
     * "parquet" or the bucketed db name. Memo-shared frames embed this in

@@ -189,13 +189,15 @@ object Analytics {
     * user's previous one (lag): value delta and inter-purchase gap. The
     * unique (ts, event_id) ordering key makes lag deterministic; the gap
     * is integer microseconds (exact), the delta plain IEEE subtraction
-    * (identical in any engine).
+    * (identical in any engine). The output order starts with the window
+    * key, so one range exchange on user_id serves the window and the sort
+    * (`Telematics.rangedByUser`).
     */
   def purchaseDeltas(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    Tables.events(spark, dir)
+    Telematics.rangedByUser(Tables.events(spark, dir)
       .filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("event_id"), col("ts"), col("value"))
+      .select(col("user_id"), col("event_id"), col("ts"), col("value")))
       .withColumn("prev_value", lag(col("value"), 1).over(w))
       .withColumn("prev_ts", lag(col("ts"), 1).over(w))
       .filter(col("prev_value").isNotNull)
@@ -421,14 +423,15 @@ object Analytics {
   /** q_running_total: per-user cumulative purchase spend over time — the
     * running-aggregate window pattern. Explicit ROWS frame + a unique
     * ordering key (ts, event_id) make the cumulative sum deterministic;
-    * decimal partials keep it exact.
+    * decimal partials keep it exact. One range exchange on user_id serves
+    * the window and the output sort (`Telematics.rangedByUser`).
     */
   def runningTotals(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    Tables.events(spark, dir)
+    Telematics.rangedByUser(Tables.events(spark, dir)
       .filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("event_id"), col("ts"), col("value"))
+      .select(col("user_id"), col("event_id"), col("ts"), col("value")))
       .withColumn("running_value", sum(money(col("value"))).over(w).cast("double"))
       .withColumn("running_n", count(lit(1)).over(w))
       .select(col("user_id"), col("event_id"),

@@ -40,9 +40,7 @@ object Decontamination {
     // shingle hashes. The corpus-wide explode + broadcast probe + keyed
     // aggregate are gone; docs with zero hits fall to the filter exactly
     // as the inner join dropped them.
-    val benchHashes = benchShingles(spark, dir, k, benchSource)
-      .collect().map(_.getLong(0))
-    java.util.Arrays.sort(benchHashes)
+    val benchHashes = sortedBenchHashes(spark, dir, k, benchSource)
     Tables.documents(spark, dir)
       .filter(col("source") =!= benchSource)
       .filter(size(split(col("text"), " ")) >= k)
@@ -70,6 +68,30 @@ object Decontamination {
       .select(explode(array_distinct(Sketches.shingleHash64(col("text"), k))).as("h"))
       .distinct()
 
+  /** Most distinct bench hashes the c-family collects: 16 MB of sorted
+    * longs, which every task of the scan carries as a constant.
+    * A benchmark corpus is MBs of text, well under this (the sf0.1 bench
+    * source has 11,548 distinct 8-shingles).
+    */
+  val MaxBenchHashes: Int = 1 << 21
+
+  /** `benchShingles` collected as one sorted array — the
+    * constant c1/c2/c3 and `contaminatedIds` probe per document. Collects
+    * at most `bound + 1` rows and raises when the set is larger, instead
+    * of running the collecting JVM or the task binaries out of memory.
+    */
+  private[operators] def sortedBenchHashes(spark: SparkSession, dir: String,
+                                           k: Int, benchSource: String,
+                                           bound: Int = MaxBenchHashes): Array[Long] = {
+    val hs = benchShingles(spark, dir, k, benchSource).limit(bound + 1)
+      .collect().map(_.getLong(0))
+    if (hs.length > bound) throw new IllegalStateException(
+      s"bench source '$benchSource' has more than $bound distinct $k-shingle hashes " +
+        "(Decontamination.MaxBenchHashes); the c-family holds them as one in-memory array")
+    java.util.Arrays.sort(hs)
+    hs
+  }
+
   /** The per-doc any-hit verdict p1 joins as its contamination stage —
     * c1's candidate join without the per-doc rollup or ordered output:
     * distinct doc_ids outside `benchSource` sharing ≥ 1 k-shingle with
@@ -91,9 +113,7 @@ object Decontamination {
         // c1's fused-kernel form (round 18): any-hit verdict straight off
         // the scan — no explode, no probe join, no distinct exchange
         // (doc_ids are unique in `documents` already)
-        val benchHashes = benchShingles(spark, dir, k, benchSource)
-          .collect().map(_.getLong(0))
-        java.util.Arrays.sort(benchHashes)
+        val benchHashes = sortedBenchHashes(spark, dir, k, benchSource)
         Tables.documents(spark, dir)
           .filter(col("source") =!= benchSource)
           .filter(size(split(col("text"), " ")) >= k)
@@ -125,9 +145,7 @@ object Decontamination {
     // Round 18: c1's fused-kernel form, LEFT-join flavour — zero-hit docs
     // keep their row (n_hit = 0), n_shingles is the distinct-hash array's
     // size (what count(lit(1)) counted per doc after the explode).
-    val benchHashes = benchShingles(spark, dir, k, benchSource)
-      .collect().map(_.getLong(0))
-    java.util.Arrays.sort(benchHashes)
+    val benchHashes = sortedBenchHashes(spark, dir, k, benchSource)
     Tables.documents(spark, dir)
       .filter(col("source") =!= benchSource)
       .filter(size(split(col("text"), " ")) >= k)
@@ -240,9 +258,7 @@ object Decontamination {
     // plus the ordered-output sort. Hit membership is the SAME exact
     // 64-bit hash set, so the rewritten text is bit-identical, including
     // the collision caveat above.
-    val benchHashes = benchShingles(spark, dir, k, benchSource)
-      .collect().map(_.getLong(0))
-    java.util.Arrays.sort(benchHashes)
+    val benchHashes = sortedBenchHashes(spark, dir, k, benchSource)
     val starts = Sketches.shingleHitStarts(col("text"), k, benchHashes)
     val rm = flatten(transform(starts, st => sequence(st, st + k - 1)))
     val keptPos = array_except(sequence(lit(0), col("n") - 1), rm)

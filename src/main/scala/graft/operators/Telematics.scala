@@ -12,13 +12,26 @@ import graft.Tables
   *
   * Design notes for scale: every operator is a declarative plan — the filter
   * ops push to the parquet scan, the keyed ops shuffle exactly once on their
-  * key, and the sequence ops (runs / consecutive pairs) use window functions
-  * partitioned by the key so a 1000-executor cluster processes each key's
-  * timeline locally after a single hash exchange. Timestamps are emitted as
+  * key, and the sequence ops (runs / consecutive pairs / sessions) use window
+  * functions partitioned by the key so a 1000-executor cluster processes
+  * each key's timeline locally after one range exchange on the key, shared
+  * by the windows, the keyed aggregate and the output sort
+  * (`rangedByUser`). Timestamps are emitted as
   * epoch microseconds (`unix_micros`) so results hash-compare exactly with
   * the DuckDB oracle regardless of parquet timestamp resolution.
   */
 object Telematics {
+
+  /** Range-partitions the projected scan on `user_id`, before a per-user
+    * sequence operator. RangePartitioning(user_id) satisfies the windows'
+    * and the keyed aggregate's clustering, and the output sort's ordering
+    * when it starts with `user_id`, so the plan has one exchange and the
+    * final sort is partition-local. A hash exchange here would leave the
+    * sort its own range exchange, whose sampling job and shuffle would each
+    * run the window stage. AQE chooses the partition count.
+    */
+  private[operators] def rangedByUser(df: DataFrame): DataFrame =
+    df.repartitionByRange(col("user_id"))
 
   /** t1: SpeedRadar — filter value >= 90, project.
     * Reference: VehicleTelematics.java:59-83 (filter spd>=90 + map).
@@ -68,13 +81,13 @@ object Telematics {
     *
     * Run-id = row_number(user) - row_number(user, event_type): the classic
     * gaps-and-islands trick — two sorts over the same user partition, both
-    * satisfied by one hash exchange on user_id.
+    * satisfied by the one range exchange on user_id.
     */
   def accidentRuns(spark: SparkSession, dir: String): DataFrame = {
     val byUser = Window.partitionBy("user_id").orderBy("ts")
     val byUserType = Window.partitionBy("user_id", "event_type").orderBy("ts")
-    Tables.events(spark, dir)
-      .select(col("user_id"), col("event_type"), col("ts"))
+    rangedByUser(Tables.events(spark, dir)
+      .select(col("user_id"), col("event_type"), col("ts")))
       .withColumn("run_id",
         row_number().over(byUser) - row_number().over(byUserType))
       .groupBy("user_id", "event_type", "run_id")
@@ -115,8 +128,7 @@ object Telematics {
     */
   def saturatedPairs(spark: SparkSession, dir: String): DataFrame = {
     val byUser = Window.partitionBy("user_id").orderBy("ts")
-    Tables.events(spark, dir)
-      .select(col("user_id"), col("ts"))
+    rangedByUser(Tables.events(spark, dir).select(col("user_id"), col("ts")))
       .withColumn("prev_ts", lag(col("ts"), 1).over(byUser))
       .filter(col("prev_ts").isNotNull &&
         unix_micros(col("ts")) - unix_micros(col("prev_ts")) < 600000000L)
@@ -131,15 +143,14 @@ object Telematics {
   /** t6: event-time session windows (30-minute inactivity gap) per user —
     * the general form of the reference's windowing surface. New-session
     * markers + running sum assign session ids in one pass over each user's
-    * timeline (single shuffle on user_id).
+    * timeline (one range exchange on user_id).
     */
   def sessionWindows(spark: SparkSession, dir: String): DataFrame = {
     val byUser = Window.partitionBy("user_id").orderBy("ts")
     val runningSession =
       Window.partitionBy("user_id").orderBy("ts")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    Tables.events(spark, dir)
-      .select(col("user_id"), col("ts"), col("value"))
+    rangedByUser(Tables.events(spark, dir).select(col("user_id"), col("ts"), col("value")))
       .withColumn("gap_us",
         unix_micros(col("ts")) - unix_micros(lag(col("ts"), 1).over(byUser)))
       .withColumn("new_session",
@@ -156,20 +167,29 @@ object Telematics {
   }
 
   /** t9: sliding event-time windows (1 hour, sliding 15 minutes) — each
-    * event lands in 4 windows; Spark's `window()` generates the assignment
-    * inline (no self-join), then a plain keyed aggregate. The overlap
-    * factor, not the row count, sizes the shuffle.
+    * event lands in 4 windows. The events are first counted and summed per
+    * 15-minute pane (one row per pane, partially aggregated at the scan);
+    * each pane then expands into the starts of its 4 windows and the pane
+    * totals are summed again per window. Exact: count and the decimal sum
+    * are associative, and Spark's `window()` assigns an event to the same 4
+    * slide-aligned starts. The expansion is 4 × panes rows, not 4 × events,
+    * and one range exchange on the window start serves the second
+    * aggregate and the output sort.
     */
-  def slidingWindows(spark: SparkSession, dir: String): DataFrame =
+  def slidingWindows(spark: SparkSession, dir: String): DataFrame = {
+    val paneUs = 900000000L
     Tables.events(spark, dir)
-      .groupBy(window(col("ts"), "1 hour", "15 minutes").as("w"))
-      .agg(
-        count(lit(1)).as("n_events"),
-        sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
+      .groupBy(expr(s"unix_micros(ts) - pmod(unix_micros(ts), $paneUs)").as("pane_us"))
+      .agg(count(lit(1)).as("n"), sum(col("value").cast("decimal(18,2)")).as("s"))
       .select(
-        unix_micros(col("w.start")).as("w_start_us"),
-        col("n_events"), col("sum_value"))
+        explode(sequence(col("pane_us") - 3 * paneUs, col("pane_us"), lit(paneUs)))
+          .as("w_start_us"),
+        col("n"), col("s"))
+      .repartitionByRange(col("w_start_us"))
+      .groupBy("w_start_us")
+      .agg(sum(col("n")).as("n_events"), sum(col("s")).cast("double").as("sum_value"))
       .orderBy("w_start_us")
+  }
 
   /** t8: as-of join — each purchase attributed to the most recent prior (or
     * simultaneous) click by the same user. A range join would explode into a

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.{DataFrame, SaveMode}
 
 import graft.operators.Dedup
-import graft.tools.PlanCounts
 
 /** Plan-SHAPE regression gate for the memo-backed d4→(d6,d7,g1) family:
   * asserts, via tree-walked PlanCounts (which stops at InMemoryTableScan
@@ -24,24 +23,6 @@ class PlanShapeSpec extends SparkSpec {
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/documents.parquet")
     dir
   }
-
-  /** Run `f` with AQE disabled — the introspection mode PlanAudit uses
-    * for PLANS.md, so every plan this spec pins matches what the audit
-    * reports. ONE toggle implementation for the whole suite.
-    */
-  private def withStaticPlan[T](f: => T): T = {
-    val prev = spark.conf.getOption("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try f
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.adaptive.enabled", v)
-      case None => spark.conf.unset("spark.sql.adaptive.enabled")
-    }
-  }
-
-  /** Static (AQE-off) executed-plan counts. */
-  private def staticCounts(df: => DataFrame): PlanCounts =
-    withStaticPlan(PlanCounts(df.queryExecution.executedPlan))
 
   test("g1/d6/d7 runtime plans read the shared d4 memo; exchanges stay bounded") {
     // three near-dup docs (a chain) + one outlier: enough for real pairs,

@@ -2,7 +2,8 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SaveMode
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit, sum, unix_micros, window}
 
 import graft.operators.Telematics
 
@@ -90,5 +91,47 @@ class TelematicsSpec extends SparkSpec {
     assert(got.head.getString(0) == "2024/01/01")
     assert(got.head.getLong(1) == 2L)
     assert(got.head.getDouble(2) == 15.0)
+  }
+
+  test("t9 pane sums equal Spark's window() over the same events") {
+    // minutes 0..299 step 7, some on 15-minute boundaries, values with cents
+    val dir = writeEvents((0 until 300 by 7).map(m =>
+      (m.toLong, m, (m % 5).toLong, "click", m * 1.37 + 0.01)))
+    val expected = Tables.events(spark, dir)
+      .groupBy(window(col("ts"), "1 hour", "15 minutes").as("w"))
+      .agg(count(lit(1)).as("n_events"),
+        sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
+      .select(unix_micros(col("w.start")).as("w_start_us"), col("n_events"), col("sum_value"))
+      .orderBy("w_start_us")
+      .collect().toSeq
+    assert(expected.size > 20)
+    assert(Telematics.slidingWindows(spark, dir).collect().toSeq == expected)
+  }
+
+  // t3/t5/t6 share one range exchange on user_id between their windows,
+  // their aggregate and the output sort; the sort is then partition-local,
+  // so the output order holds only because the ranges are ordered.
+  Seq[(String, (SparkSession, String) => DataFrame, Row => (Long, Long))](
+    ("t3", Telematics.accidentRuns, r => (r.getLong(0), r.getLong(2))),
+    ("t5", Telematics.saturatedPairs, r => (r.getLong(0), r.getLong(1))),
+    ("t6", Telematics.sessionWindows, r => (r.getLong(0), r.getLong(1)))
+  ).foreach { case (key, op, sortKey) =>
+    test(s"$key plans one exchange and returns rows in output order across partitions") {
+      // 12 users, each: 5 clicks a minute apart, a view, 4 clicks 95 min
+      // later, a view 100 min after that — runs, pairs and sessions for all
+      val dir = writeEvents(for {
+        u <- 1 to 12
+        (m, t) <- (0 to 4).map(_ -> "click") ++ Seq(5 -> "view") ++
+          (100 to 103).map(_ -> "click") ++ Seq(200 -> "view")
+      } yield ((u * 1000 + m).toLong, u * 7 + m, u.toLong, t, 1.0))
+      val plan = staticCounts(op(spark, dir))
+      assert(plan.shuffles == 1, s"$key must shuffle once, got $plan")
+      withConf("spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+        val df = op(spark, dir)
+        val got = df.collect().map(sortKey).toSeq
+        assert(got.nonEmpty && got == got.sorted, s"$key rows out of order: $got")
+        assert(df.rdd.getNumPartitions > 1, s"$key ran in one partition")
+      }
+    }
   }
 }
