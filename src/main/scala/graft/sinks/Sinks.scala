@@ -1,8 +1,7 @@
 package graft.sinks
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Sinks, batch and streaming — the counterpart of the reference's
   * `writeAsCsv(..., WriteMode.OVERWRITE).setParallelism(1)` and print sinks.
@@ -12,15 +11,10 @@ object Sinks {
   /** Single-file CSV, like the reference's parallelism-1 CSV sink. The
     * coalesce(1) is the *sink's* constraint, applied after the computation
     * — upstream stages keep full parallelism, only the final write funnels
-    * to one file. For cluster-scale outputs use `writeCsv` (one file per
-    * partition) instead.
+    * to one file.
     */
   def writeCsvSingle(df: DataFrame, path: String): Unit =
     df.coalesce(1).write.mode("overwrite").csv(path)
-
-  /** Partitioned CSV output at full parallelism. */
-  def writeCsv(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").csv(path)
 
   /** JSON-lines output — the interchange format most text-pipeline tooling
     * consumes; one JSONL file per partition at full parallelism.
@@ -67,10 +61,6 @@ object Sinks {
       .option("checkpointLocation", checkpoint)
       .outputMode("append")
       .start()
-
-  /** The reference's PrintSinkFunction analog. */
-  def streamToConsole(df: DataFrame): StreamingQuery =
-    df.writeStream.format("console").outputMode("append").start()
 
   /** Hive-style partitioned parquet: one directory per partition-column
     * value (`day=2024-01-01/...`). At fleet scale this IS the table layout —
@@ -289,18 +279,6 @@ object Sinks {
       need.length
     }
   }
-
-  /** Streaming twin: partitioned parquet from an unbounded frame. */
-  def streamToPartitionedParquet(df: DataFrame, path: String,
-                                 checkpoint: String,
-                                 partitionCols: Seq[String]): StreamingQuery =
-    df.writeStream
-      .format("parquet")
-      .option("path", path)
-      .option("checkpointLocation", checkpoint)
-      .partitionBy(partitionCols: _*)
-      .outputMode("append")
-      .start()
 
   /** The idempotent per-batch write `foreachBatchIdempotent` replays: the
     * batch lands in its own `batch_id=<n>` directory under dynamic

@@ -8,9 +8,9 @@ import org.apache.spark.sql.types._
   *
   * The reference consumes newline CSV telemetry via `readTextFile`
   * (VehicleTelematics.java:42-56, `time,vid,spd,xway,lane,dir,seg,pos`);
-  * here the same data arrives through Spark's file sources — schema'd CSV or
-  * parquet, batch (`read`) or unbounded (`readStream`), where new files in
-  * the directory are the stream.
+  * here the same data arrives through Spark's file sources — schema'd CSV,
+  * batch (`read`) or unbounded (`readStream`), where new files in the
+  * directory are the stream.
   */
 object EventSources {
 
@@ -25,12 +25,6 @@ object EventSources {
     StructField("seg", IntegerType, nullable = false),
     StructField("pos", IntegerType, nullable = false)))
 
-  /** The driver-generated events schema (ts as µs-precision timestamp). */
-  val eventSchema: StructType = StructType(Seq(
-    StructField("event_id", LongType), StructField("ts", TimestampType),
-    StructField("user_id", LongType), StructField("event_type", StringType),
-    StructField("value", DoubleType), StructField("props", StringType)))
-
   /** Batch CSV read of reference-format telemetry. */
   def carDataCsv(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(carDataSchema).csv(path)
@@ -38,10 +32,6 @@ object EventSources {
   /** Unbounded CSV read of reference-format telemetry (file stream). */
   def carDataCsvStream(spark: SparkSession, dir: String): DataFrame =
     spark.readStream.schema(carDataSchema).csv(dir)
-
-  /** Unbounded parquet read of `events`-schema data. */
-  def eventStream(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream.schema(eventSchema).parquet(dir)
 
   /** Batch JSONL read with an explicit schema — schema-on-read, no
     * inference scan (an inference pass over 100 TB is a second full read).

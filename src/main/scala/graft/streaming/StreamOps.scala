@@ -563,6 +563,12 @@ object StreamOps {
         crc.getValue)
     }
 
+  /** A processor's state TTL from its `ttl` dial: Duration.ZERO selects
+    * no TTL (the AvailableNow/spec mode), any other duration expires idle
+    * state after it. */
+  private def ttlConfig(ttl: java.time.Duration): TTLConfig =
+    if (ttl.isZero) TTLConfig.NONE else TTLConfig(ttl)
+
   class WarcReassembleProcessor(ttl: java.time.Duration)
       extends StatefulProcessor[Long, WarcChunk, WarcRecordRow] {
     @transient private var buf: ValueState[WarcBuf] = _
@@ -571,12 +577,10 @@ object StreamOps {
     // buffer does not mean the transfer is over, and clearing nextSeq
     // would let a late chunk restart at 0 instead of failing the order
     // contract), so long-running ingest retires finished containers via
-    // the state TTL — the d2/d8 processors' dial. Duration.ZERO selects
-    // TTLConfig.NONE (the AvailableNow/spec mode).
+    // the state TTL ([[ttlConfig]]).
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       buf = getHandle.getValueState[WarcBuf](
-        "buf", Encoders.product[WarcBuf],
-        if (ttl.isZero) TTLConfig.NONE else TTLConfig(ttl))
+        "buf", Encoders.product[WarcBuf], ttlConfig(ttl))
 
     override def handleInputRows(cid: Long, rows: Iterator[WarcChunk],
                                  tv: TimerValues): Iterator[WarcRecordRow] = {
@@ -624,8 +628,7 @@ object StreamOps {
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       buf = getHandle.getValueState[GzWarcBuf](
-        "gzbuf", Encoders.product[GzWarcBuf],
-        if (ttl.isZero) TTLConfig.NONE else TTLConfig(ttl))
+        "gzbuf", Encoders.product[GzWarcBuf], ttlConfig(ttl))
 
     override def handleInputRows(cid: Long, rows: Iterator[WarcChunk],
                                  tv: TimerValues): Iterator[WarcRecordRow] = {
@@ -669,75 +672,61 @@ object StreamOps {
         s"container $cid compressed pending buffer ${compPending.length} B " +
           "holds no complete gzip member within the record bound: " +
           "unframeable/corrupt stream")
-      // inflated bytes feed the SAME plain record framing as the plain
-      // transport (drainWarcChunks' core, single-chunk form)
-      val (recs, plain2) = drainGzPlain(cid, st.plain, inflated.toByteArray)
+      // inflated bytes feed the SAME framing gate as the plain
+      // transport, as one slice per batch
+      val (recs, plain2) = frameWarcBytes(cid, st.plain,
+        Seq(inflated.toByteArray))
       buf.update(GzWarcBuf(nextSeq, compPending, plain2))
       auditReassembled(cid, recs).iterator
     }
   }
 
-  /** Feed freshly inflated bytes into the plain record-framing state —
-    * the single-chunk form of drainWarcChunks' parse gate (same need
-    * hint, same header-bound corruption check), shared so the gz
-    * transport cannot frame differently from the plain one.
-    */
-  private def drainGzPlain(cid: Long, st0: WarcBuf, add: Array[Byte])
-      : (Seq[graft.sources.Warc.WarcRecord], WarcBuf) = {
-    if (add.isEmpty && st0.pending.isEmpty) return (Seq.empty, st0)
-    val buf = new java.io.ByteArrayOutputStream(
-      st0.pending.length + add.length)
-    buf.write(st0.pending)
-    buf.write(add)
-    var base = st0.baseOffset
-    var need = st0.need
-    val out = Seq.newBuilder[graft.sources.Warc.WarcRecord]
-    if (need < 0 || buf.size() >= need) {
-      val joined = buf.toByteArray
-      val (recs, leftover) = graft.sources.Warc.parseWarcPrefix(joined, base)
-      out ++= recs
-      base += joined.length - leftover.length
-      buf.reset()
-      buf.write(leftover)
-      need = graft.sources.Warc.recordNeed(leftover, base)
-    }
-    require(need >= 0 || buf.size() <= MaxWarcHeaderBytes,
-      s"container $cid pending buffer ${buf.size()} B holds no complete " +
-        s"header block within $MaxWarcHeaderBytes B: unframeable/corrupt " +
-        "stream")
-    (out.result(), WarcBuf(st0.nextSeq, base, buf.toByteArray, need))
-  }
-
   /** The reassembly drain shared by the audit and WET-conversion
-    * processors: enforce the per-container chunk-order contract, append
-    * to the pending buffer, let `parseWarcPrefix` frame every COMPLETE
-    * record, keep only the incomplete tail. Returns the completed
-    * records (container offsets already absolute) plus the new state.
+    * processors: enforce the per-container chunk-order contract, then
+    * feed the chunks in seq order through [[frameWarcBytes]]. Returns the
+    * completed records (container offsets already absolute) plus the new
+    * state.
     */
   private def drainWarcChunks(cid: Long, st0: WarcBuf,
                               rows: Iterator[WarcChunk]):
       (Seq[graft.sources.Warc.WarcRecord], WarcBuf) = {
     var nextSeq = st0.nextSeq
+    val slices = rows.toSeq.sortBy(_.seq).map { c =>
+      require(c.seq == nextSeq,
+        s"container $cid chunk gap: expected seq $nextSeq, got ${c.seq}")
+      nextSeq = c.seq + 1
+      c.bytes
+    }
+    val (recs, st) = frameWarcBytes(cid, st0, slices)
+    (recs, st.copy(nextSeq = nextSeq))
+  }
+
+  /** The WARC framing gate, one copy for the plain and gz transports:
+    * append each byte slice to the pending buffer, let `parseWarcPrefix`
+    * frame every COMPLETE record, keep only the incomplete tail. Returns
+    * the completed records plus the state with the new pending tail, base
+    * offset and `need`.
+    */
+  private def frameWarcBytes(cid: Long, st0: WarcBuf,
+                             slices: Seq[Array[Byte]]):
+      (Seq[graft.sources.Warc.WarcRecord], WarcBuf) = {
     var base = st0.baseOffset
     var need = st0.need
     val out = Seq.newBuilder[graft.sources.Warc.WarcRecord]
-    // Growable pending buffer: appending a chunk is amortized O(chunk),
-    // never a full `pending ++ chunk` copy — together with the `need`
+    // Growable pending buffer: appending a slice is amortized O(slice),
+    // never a full `pending ++ slice` copy — together with the `need`
     // resume hint below, a record of size N arriving in k chunks costs
     // O(N) in copies and parse work instead of the old O(N·k) re-parse
     // of the pending prefix on every chunk.
     val buf = new java.io.ByteArrayOutputStream(
       math.max(64, st0.pending.length + 64))
     buf.write(st0.pending)
-    rows.toSeq.sortBy(_.seq).foreach { c =>
-      require(c.seq == nextSeq,
-        s"container $cid chunk gap: expected seq $nextSeq, got ${c.seq}")
-      nextSeq = c.seq + 1
-      buf.write(c.bytes)
+    slices.foreach { add =>
+      buf.write(add)
       // Parse only when the pending bytes CAN complete a record: while
-      // the head is still arriving (`need` unknown) any chunk may finish
+      // the head is still arriving (`need` unknown) any slice may finish
       // it, and that phase is bounded by MaxWarcHeaderBytes; once the
-      // total frame length is known, chunks append without a parse until
+      // total frame length is known, slices append without a parse until
       // enough bytes exist.
       if (need < 0 || buf.size() >= need) {
         val joined = buf.toByteArray
@@ -762,7 +751,8 @@ object StreamOps {
           s"header block within $MaxWarcHeaderBytes B: unframeable/corrupt " +
           "stream")
     }
-    (out.result(), WarcBuf(nextSeq, base, buf.toByteArray, need))
+    (out.result(), st0.copy(baseOffset = base, pending = buf.toByteArray,
+      need = need))
   }
 
   /** One streaming WET `conversion` row — w2's audit shape with the
@@ -792,11 +782,10 @@ object StreamOps {
     @transient private var wetOff: ValueState[Long] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      val cfg = if (ttl.isZero) TTLConfig.NONE else TTLConfig(ttl)
       buf = getHandle.getValueState[WarcBuf](
-        "buf", Encoders.product[WarcBuf], cfg)
+        "buf", Encoders.product[WarcBuf], ttlConfig(ttl))
       wetOff = getHandle.getValueState[Long](
-        "wetOff", Encoders.scalaLong, cfg)
+        "wetOff", Encoders.scalaLong, ttlConfig(ttl))
     }
 
     override def handleInputRows(cid: Long, rows: Iterator[WarcChunk],
@@ -857,9 +846,9 @@ object StreamOps {
     warnIfUnsaferowState(spark, "warcRecordStream")
     chunks
       .groupByKey(_.container_id)
-      // TTL state requires TimeMode.ProcessingTime (the d2/d8 dial
-      // wiring) — a non-NONE TTLConfig under TimeMode.None fails at
-      // query start with StatefulProcessorCannotAssignTTLInTimeMode
+      // TTL state requires TimeMode.ProcessingTime — a non-NONE
+      // TTLConfig under TimeMode.None fails at query start with
+      // StatefulProcessorCannotAssignTTLInTimeMode
       .transformWithState(new WarcReassembleProcessor(ttl),
         if (ttl.isZero) TimeMode.None() else TimeMode.ProcessingTime(),
         OutputMode.Append())
@@ -928,25 +917,6 @@ object StreamOps {
                                 media_type: String, payload: Array[Byte],
                                 is_new: Boolean)
 
-  /** Live-index recount, short-circuited at the admission cap: the count
-    * only gates against `maxBucketSize`, so once `cap` entries are seen
-    * the bucket is closed and iterating the rest of the state store is
-    * wasted work.
-    */
-  private def liveCountUpTo(it: Iterator[_], cap: Int): Long = {
-    var c = 0L
-    while (c < cap && it.hasNext) { it.next(); c += 1 }
-    c
-  }
-
-  /** One (band, fingerprint) row after the shuffle — payloads never get
-    * this far; only the 64-bit aHash travels and is stored.
-    */
-  case class BandedMediaHash(bkey: String, doc_id: Long, ts: Timestamp,
-                             is_new: Boolean, ahash64: Long)
-
-  case class SeededHashEntry(ahash64: Long, is_new: Boolean)
-
   /** One perceptual collision detection: exact hamming + the ≤ maxHamming
     * verdict (sub-threshold candidates emit too — batch m9's tuning-table
     * contract), with d8's role flags.
@@ -955,63 +925,19 @@ object StreamOps {
                              near_dup: Boolean, a_new: Boolean,
                              b_new: Boolean, ts: Timestamp)
 
-  /** The per-band standing index + compare for [[mediaNearDupStream]] —
-    * the IncrementalDedupProcessor discipline on image fingerprints:
-    * MapState holds (doc_id → 64-bit aHash + role), never payloads; a
-    * full bucket (`maxBucketSize`) stops admitting — the streaming face
-    * of m9's over-full-bucket recall trade (batch drops degenerate
-    * buckets whole; an ingest guard caps the standing side so one flat
-    * band value can never make per-arrival work unbounded). Seeds sort
-    * first within a micro-batch (d8's convention: corpus rows never pair
-    * with each other, whatever the batch split).
-    */
-  class MediaNearDupProcessor(maxHamming: Int, maxBucketSize: Int,
-                              ttl: java.time.Duration)
-      extends StatefulProcessor[String, BandedMediaHash, MediaNearDupHit] {
-    @transient private var hashes: MapState[Long, SeededHashEntry] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      val cfg = if (ttl.isZero) TTLConfig.NONE else TTLConfig(ttl)
-      hashes = getHandle.getMapState[Long, SeededHashEntry](
-        "hashes", Encoders.scalaLong, Encoders.product[SeededHashEntry], cfg)
-    }
-
-    override def handleInputRows(bkey: String, rows: Iterator[BandedMediaHash],
-                                 tv: TimerValues): Iterator[MediaNearDupHit] = {
-      // LIVE index size, recounted at batch start: an admission counter in
-      // ValueState would never decrement when TTL expires entries, leaving
-      // a once-full band permanently closed after its index drained
-      var n = liveCountUpTo(hashes.iterator(), maxBucketSize)
-      val out = Seq.newBuilder[MediaNearDupHit]
-      rows.toSeq.sortBy(d => (d.is_new, d.doc_id)).foreach { d =>
-        if (n < maxBucketSize && !hashes.containsKey(d.doc_id)) {
-          if (d.is_new) {
-            hashes.iterator().foreach { case (otherId, e) =>
-              val ham = java.lang.Long.bitCount(e.ahash64 ^ d.ahash64).toLong
-              val (a, b, aN, bN) =
-                if (otherId < d.doc_id) (otherId, d.doc_id, e.is_new, true)
-                else (d.doc_id, otherId, true, e.is_new)
-              out += MediaNearDupHit(a, b, ham, ham <= maxHamming, aN, bN, d.ts)
-            }
-          }
-          hashes.updateValue(d.doc_id, SeededHashEntry(d.ahash64, d.is_new))
-          n += 1
-        }
-      }
-      out.result().iterator
-    }
-  }
-
   /** m9's streaming twin: perceptual near-dup ingest guard against a
-    * standing fingerprint index (the d8/incrementalDedupStream pattern on
-    * image fingerprints). Arriving image payloads decode through the SAME
-    * pixel seam and aHash kernel as batch m4/m9 — one narrow flatMap, so
-    * payload bytes never shuffle and never enter state — then fan out to
-    * the SAME 4×16-bit bands as `Multimodal.bandedHashPairs` (pigeonhole:
-    * every pair at hamming ≤ 3 shares a band) and compare against the
-    * per-band standing index with exact hamming. Emissions carry the
-    * sub-threshold candidates and role flags exactly like batch m9 /
-    * stream d8; one detection per colliding band — chain
+    * standing fingerprint index — [[BandIndexProcessor]], the d2/d8 twins'
+    * processor, on image fingerprints. Arriving image payloads decode
+    * through the SAME pixel seam and aHash kernel as batch m4/m9 — one
+    * narrow flatMap, so payload bytes never shuffle and never enter state,
+    * only the 64-bit aHash does — then fan out to the SAME 4×16-bit bands
+    * as `Multimodal.bandedHashPairs` (pigeonhole: every pair at hamming ≤ 3
+    * shares a band) and compare against the per-band standing index with
+    * exact hamming, every candidate kept. The processor's bucket cap is
+    * the streaming face of m9's over-full-bucket recall trade: one flat
+    * band value can never make per-arrival work unbounded. Emissions
+    * carry the sub-threshold candidates and role flags exactly like batch
+    * m9 / stream d8; one detection per colliding band — chain
     * `dropDuplicatesWithinWatermark("a_id","b_id")` for one-row-per-pair.
     * On the shared corpus (all rows `is_new`, fed in id order) the
     * deduped pair set is batch `mediaNearDup`'s, which StreamOpsSpec
@@ -1023,25 +949,27 @@ object StreamOps {
                          ttl: java.time.Duration = java.time.Duration.ofHours(1),
                          watermark: String = "10 seconds"): Dataset[MediaNearDupHit] = {
     import spark.implicits._
-    blobs
+    val banded = blobs
       .filter(_.media_type == "image")
       .flatMap { b =>
         decoder.decode(b.payload).toSeq.flatMap { img =>
-          val h = Multimodal.aHash64(img)
+          val h = Array(Multimodal.aHash64(img))
           (0 until 4).map { band =>
-            BandedMediaHash(s"$band:${(h >>> (band * 16)) & 0xFFFFL}",
+            SeededBandedSig(s"$band:${(h(0) >>> (band * 16)) & 0xFFFFL}",
               b.doc_id, b.ts, b.is_new, h)
           }
         }
       }
       .toDF()
       .withWatermark("ts", watermark)
-      .as[BandedMediaHash]
-      .groupByKey(_.bkey)
-      .transformWithState(
-        new MediaNearDupProcessor(maxHamming, maxBucketSize, ttl),
-        if (ttl.isZero) TimeMode.EventTime() else TimeMode.ProcessingTime(),
-        OutputMode.Append())
+      .as[SeededBandedSig]
+    val hamming = (a: Array[Long], b: Array[Long]) =>
+      Some(java.lang.Long.bitCount(a(0) ^ b(0)).toDouble)
+    bandIndexStream(spark, banded, hamming, maxBucketSize, ttl)
+      .select(col("a_id"), col("b_id"), col("score").cast("long").as("hamming"),
+        (col("score") <= maxHamming).as("near_dup"), col("a_new"),
+        col("b_new"), col("ts"))
+      .as[MediaNearDupHit]
   }
 
   /** One micro-batch of the ingest-time contamination guard — the pure
@@ -1520,83 +1448,111 @@ object StreamOps {
         TimeMode.None(), OutputMode.Append())
   }
 
-  // --- Streaming MinHash-LSH near-dup detection (the d2 twin) -----------
+  // --- Streaming near-dup detection on one standing band index ----------
+  // (the d2, d8 and m9 twins)
 
   case class TextDoc(doc_id: Long, ts: Timestamp, text: String)
-
-  case class BandedSig(bkey: String, doc_id: Long, ts: Timestamp,
-                       sig: Array[Long])
-
-  case class SigEntry(sig: Array[Long])
 
   case class NearDupPair(a_id: Long, b_id: Long, est_jaccard: Double,
                          ts: Timestamp)
 
-  /** One LSH band bucket as a transformWithState key: arriving documents
-    * score against the signatures already RESIDENT in the bucket (MapState
-    * doc_id → signature), emit near-dup pairs at est_jaccard ≥ the
-    * threshold, then join the residency — so pairs surface ACROSS
-    * micro-batches, the property the batch operator cannot give a live
-    * ingest feed.
+  /** A document tagged with its corpus role: `is_new = false` rows SEED
+    * the standing corpus (store-only), `is_new = true` rows are the live
+    * ingest feed that probes it. */
+  case class SeedableDoc(doc_id: Long, ts: Timestamp, text: String,
+                         is_new: Boolean)
+
+  /** One banded-entry row of [[BandIndexProcessor]]: a doc's signature
+    * under one band-bucket key, with its corpus role. The signature is the
+    * MinHash signature for d2/d8 and the one-element aHash for m9. */
+  case class SeededBandedSig(bkey: String, doc_id: Long, ts: Timestamp,
+                             is_new: Boolean, sig: Array[Long])
+
+  case class SeededSigEntry(sig: Array[Long], is_new: Boolean)
+
+  /** One detection of the band index: the id-ordered pair, the score the
+    * twin's score function kept, both roles and the probe's event time. */
+  case class BandHit(a_id: Long, b_id: Long, score: Double,
+                     a_new: Boolean, b_new: Boolean, ts: Timestamp)
+
+  case class IncNearDupPair(a_id: Long, b_id: Long, est_jaccard: Double,
+                            a_new: Boolean, b_new: Boolean, ts: Timestamp)
+
+  /** The standing band index all three near-dup twins run on (d2, d8, m9):
+    * one band bucket is one transformWithState key, and its residents
+    * live in MapState (doc_id → signature + role), never payloads or
+    * text. An arriving `is_new` row scores against every resident and
+    * emits one [[BandHit]] per resident `score` keeps, then joins the
+    * residency — so pairs surface ACROSS micro-batches, the property the
+    * batch operators cannot give a live ingest feed. Corpus seeds
+    * (`is_new = false`) join the residency without scoring, so a
+    * historical corpus is never re-paired with itself however it is
+    * replayed into state (batch d8's batch×corpus asymmetry, given to a
+    * live feed, with candidate work ∝ the feed's bucket occupancy). The
+    * twins differ only in `score`.
     *
-    * The same two guards as batch d2, restated for unbounded input:
-    *  - the bucket CAP: once a bucket holds `maxBucketSize` signatures it
-    *    goes dark (no store, no emit) — a hot band bucket is stop-shingle
-    *    territory whose O(n²) pair volume the cap exists to prevent;
-    *    recall is preserved by the doc's other bands. Batch drops the
-    *    whole bucket retroactively; a stream cannot retract, so the cap is
-    *    reached-then-dark — the first `maxBucketSize` arrivals still pair.
-    *  - per-state TTL (processing-time, RocksDB-native) expires idle
-    *    buckets, bounding total state to the active working set exactly
-    *    like FirstSeenProcessor's infinite-retention posture. TTL state
-    *    requires TimeMode.ProcessingTime, whose maintenance work keeps
-    *    shouldRunAnotherBatch true perpetually (same constraint
+    * The policy, one copy for all three twins:
+    *  - Order within a micro-batch: seeds store first, then new rows probe
+    *    in doc_id order. A replay of the same batch boundaries reproduces
+    *    the same detections, and a seed and a probe arriving in the same
+    *    batch DO pair, exactly like the batch operators. A seed arriving
+    *    after a probe (out-of-order corpus backfill) pairs with nothing —
+    *    seed the corpus before, or at latest alongside, the feed.
+    *  - The bucket CAP: once a bucket holds `maxBucketSize` residents
+    *    (both roles counted — batch d8 likewise caps on the full corpus
+    *    bucket) it goes dark: no store, no emit. A hot bucket is
+    *    stop-shingle or flat-band territory whose O(n²) pair volume the
+    *    cap exists to prevent; recall is preserved by the doc's other
+    *    bands. Batch drops an over-full bucket retroactively; a stream
+    *    cannot retract, so the cap is reached-then-dark — the first
+    *    `maxBucketSize` arrivals still pair. The size is recounted LIVE at
+    *    batch start: an admission counter in ValueState would never
+    *    decrement when TTL expires residents, leaving a once-full bucket
+    *    permanently closed after its index drained.
+    *  - Per-state TTL (processing-time, RocksDB-native) expires idle
+    *    buckets, bounding total state to the active working set like
+    *    FirstSeenProcessor's infinite-retention posture. TTL state requires
+    *    TimeMode.ProcessingTime, whose maintenance work keeps
+    *    shouldRunAnotherBatch true perpetually (the constraint
     *    FirstSeenProcessor documents) — so `ttl = ZERO` selects EventTime
     *    mode with no TTL instead: watermark-bounded harness/bench runs
-    *    terminate under AvailableNow, and the production deployment opts
-    *    into TTL with a nonzero duration.
+    *    terminate under AvailableNow, and a production deployment opts
+    *    into TTL with a nonzero duration ([[bandIndexStream]] wires both).
     *
-    * State per bucket is ≤ cap signatures of `numHashes` longs plus one
-    * count — with the 32-hash default and the 2000 cap, ≤ 512 KB worst
-    * case, shardable by bucket key with no cross-key coordination.
+    * State per bucket is ≤ cap signatures — with d2/d8's 32-hash default
+    * and the 2000 cap, ≤ 512 KB worst case — shardable by bucket key with
+    * no cross-key coordination.
     */
-  class LshDedupProcessor(numHashes: Int, minEstJaccard: Double,
-                          maxBucketSize: Int, ttl: java.time.Duration)
-      extends StatefulProcessor[String, BandedSig, NearDupPair] {
-    @transient private var sigs: MapState[Long, SigEntry] = _
+  class BandIndexProcessor(score: (Array[Long], Array[Long]) => Option[Double],
+                           maxBucketSize: Int, ttl: java.time.Duration)
+      extends StatefulProcessor[String, SeededBandedSig, BandHit] {
+    @transient private var sigs: MapState[Long, SeededSigEntry] = _
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      val cfg = if (ttl.isZero) TTLConfig.NONE else TTLConfig(ttl)
-      sigs = getHandle.getMapState[Long, SigEntry](
-        "sigs", Encoders.scalaLong, Encoders.product[SigEntry], cfg)
-    }
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      sigs = getHandle.getMapState[Long, SeededSigEntry](
+        "sigs", Encoders.scalaLong, Encoders.product[SeededSigEntry],
+        ttlConfig(ttl))
 
-    override def handleInputRows(bkey: String, rows: Iterator[BandedSig],
-                                 tv: TimerValues): Iterator[NearDupPair] = {
-      // live index size, recounted at batch start (see MediaNearDupProcessor:
-      // a TTL-expired index must re-open its bucket, which an admission
-      // counter never would)
-      var n = liveCountUpTo(sigs.iterator(), maxBucketSize)
-      val out = Seq.newBuilder[NearDupPair]
-      // within a batch, docs score in doc_id order so a replay of the same
-      // batch boundaries reproduces the same pair set
-      rows.toSeq.sortBy(_.doc_id).foreach { d =>
+    override def handleInputRows(bkey: String, rows: Iterator[SeededBandedSig],
+                                 tv: TimerValues): Iterator[BandHit] = {
+      // the live recount stops at the cap: past it the bucket is closed,
+      // and iterating the rest of the state store is wasted work
+      var n = 0L
+      val live = sigs.iterator()
+      while (n < maxBucketSize && live.hasNext) { live.next(); n += 1 }
+      val out = Seq.newBuilder[BandHit]
+      rows.toSeq.sortBy(d => (d.is_new, d.doc_id)).foreach { d =>
         if (n < maxBucketSize && !sigs.containsKey(d.doc_id)) {
-          sigs.iterator().foreach { case (otherId, e) =>
-            var eq = 0
-            var i = 0
-            while (i < numHashes) {
-              if (e.sig(i) == d.sig(i)) eq += 1
-              i += 1
-            }
-            val est = eq.toDouble / numHashes
-            if (est >= minEstJaccard) {
-              val (a, b) = if (otherId < d.doc_id) (otherId, d.doc_id)
-                           else (d.doc_id, otherId)
-              out += NearDupPair(a, b, math.round(est * 1e6) / 1e6, d.ts)
+          if (d.is_new) {
+            sigs.iterator().foreach { case (otherId, e) =>
+              score(e.sig, d.sig).foreach { s =>
+                out += (if (otherId < d.doc_id)
+                    BandHit(otherId, d.doc_id, s, e.is_new, true, d.ts)
+                  else BandHit(d.doc_id, otherId, s, true, e.is_new, d.ts))
+              }
             }
           }
-          sigs.updateValue(d.doc_id, SigEntry(d.sig))
+          sigs.updateValue(d.doc_id, SeededSigEntry(d.sig, d.is_new))
           n += 1
         }
       }
@@ -1604,10 +1560,27 @@ object StreamOps {
     }
   }
 
-  /** d2 as a stream: MinHash signatures band into bucket keys exactly like
-    * the batch operator (same kernel, same raw-slice bucket identity, here
-    * rendered to a string key), then LshDedupProcessor emits near-dup
-    * pairs against bucket-resident signatures across micro-batches.
+  /** Banded rows → [[BandIndexProcessor]] detections, keyed by band
+    * bucket; `ttl = ZERO` runs in EventTime mode, any other TTL in
+    * ProcessingTime mode (see the processor's policy). */
+  private def bandIndexStream(spark: SparkSession,
+                              banded: Dataset[SeededBandedSig],
+                              score: (Array[Long], Array[Long]) => Option[Double],
+                              maxBucketSize: Int,
+                              ttl: java.time.Duration): Dataset[BandHit] = {
+    import spark.implicits._
+    banded
+      .groupByKey(_.bkey)
+      .transformWithState(
+        new BandIndexProcessor(score, maxBucketSize, ttl),
+        if (ttl.isZero) TimeMode.EventTime() else TimeMode.ProcessingTime(),
+        OutputMode.Append())
+  }
+
+  /** d2 as a stream: the d8 twin ([[incrementalDedupStream]]) with every
+    * document a feed row (`is_new = true`), so every resident is a
+    * candidate — the same kernel, bucket identity and
+    * [[BandIndexProcessor]] — projected to [[NearDupPair]].
     *
     * Output is one detection per COLLIDING BAND: a pair caught by several
     * bands emits once per band (identically scored). The batch operator
@@ -1623,111 +1596,20 @@ object StreamOps {
                             ttl: java.time.Duration = java.time.Duration.ofHours(1),
                             watermark: String = "10 seconds"): Dataset[NearDupPair] = {
     import spark.implicits._
-    val rows = numHashes / bands
-    docs.toDF()
-      .withWatermark("ts", watermark)
-      .filter(size(split(col("text"), " ")) >= shingleSize)
-      .select(col("doc_id"), col("ts"),
-        graft.operators.Dedup.minHashSignature(
-          graft.operators.Dedup.shingles(col("text"), shingleSize),
-          numHashes).as("sig"))
-      .select(
-        explode(transform(sequence(lit(0), lit(bands - 1)),
-          b => concat_ws(":", b.cast("string"),
-            slice(col("sig"), b * rows + 1, lit(rows)).cast("string"))))
-          .as("bkey"),
-        col("doc_id"), col("ts"), col("sig"))
-      .as[BandedSig]
-      .groupByKey(_.bkey)
-      .transformWithState(
-        new LshDedupProcessor(numHashes, minEstJaccard, maxBucketSize, ttl),
-        if (ttl.isZero) TimeMode.EventTime() else TimeMode.ProcessingTime(),
-        OutputMode.Append())
+    incrementalDedupStream(spark,
+        docs.toDF().withColumn("is_new", lit(true)).as[SeedableDoc],
+        shingleSize, numHashes, bands, minEstJaccard, maxBucketSize, ttl,
+        watermark)
+      .select("a_id", "b_id", "est_jaccard", "ts")
+      .as[NearDupPair]
   }
 
-  // --- Streaming incremental dedup (the d8 twin) ------------------------
-
-  /** A document tagged with its corpus role: `is_new = false` rows SEED
-    * the standing corpus (store-only), `is_new = true` rows are the live
-    * ingest feed that probes it. */
-  case class SeedableDoc(doc_id: Long, ts: Timestamp, text: String,
-                         is_new: Boolean)
-
-  case class SeededBandedSig(bkey: String, doc_id: Long, ts: Timestamp,
-                             is_new: Boolean, sig: Array[Long])
-
-  case class SeededSigEntry(sig: Array[Long], is_new: Boolean)
-
-  case class IncNearDupPair(a_id: Long, b_id: Long, est_jaccard: Double,
-                            a_new: Boolean, b_new: Boolean, ts: Timestamp)
-
-  /** The d8 shape on transformWithState: the standing corpus lives as band
-    * buckets in (RocksDB) state, and only NEW documents probe it — corpus
-    * seeds join bucket residency without scoring, so the historical corpus
-    * is never re-paired with itself no matter how it is replayed into
-    * state. Batch d8 gets the same asymmetry per run via its batch×corpus
-    * join; this processor gives it to a live feed, across micro-batches,
-    * with candidate work ∝ the FEED's bucket occupancy.
-    *
-    * Same cap/TTL posture as LshDedupProcessor (reached-then-dark cap
-    * counting BOTH roles — batch d8 likewise caps on the full corpus
-    * bucket; TTL ZERO = EventTime mode for terminating runs). Ordering
-    * within a micro-batch is deterministic: seeds store first, then new
-    * docs probe in doc_id order — so a corpus seed and a probe arriving
-    * in the same batch DO pair, exactly like the batch operator. A seed
-    * arriving after a probe (out-of-order corpus backfill) pairs with
-    * nothing — seed the corpus before, or at latest alongside, the feed.
-    */
-  class IncrementalDedupProcessor(numHashes: Int, minEstJaccard: Double,
-                                  maxBucketSize: Int, ttl: java.time.Duration)
-      extends StatefulProcessor[String, SeededBandedSig, IncNearDupPair] {
-    @transient private var sigs: MapState[Long, SeededSigEntry] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      val cfg = if (ttl.isZero) TTLConfig.NONE else TTLConfig(ttl)
-      sigs = getHandle.getMapState[Long, SeededSigEntry](
-        "sigs", Encoders.scalaLong, Encoders.product[SeededSigEntry], cfg)
-    }
-
-    override def handleInputRows(bkey: String, rows: Iterator[SeededBandedSig],
-                                 tv: TimerValues): Iterator[IncNearDupPair] = {
-      // live index size, recounted at batch start (see MediaNearDupProcessor:
-      // a TTL-expired index must re-open its bucket, which an admission
-      // counter never would)
-      var n = liveCountUpTo(sigs.iterator(), maxBucketSize)
-      val out = Seq.newBuilder[IncNearDupPair]
-      rows.toSeq.sortBy(d => (d.is_new, d.doc_id)).foreach { d =>
-        if (n < maxBucketSize && !sigs.containsKey(d.doc_id)) {
-          if (d.is_new) {
-            sigs.iterator().foreach { case (otherId, e) =>
-              var eq = 0
-              var i = 0
-              while (i < numHashes) {
-                if (e.sig(i) == d.sig(i)) eq += 1
-                i += 1
-              }
-              val est = eq.toDouble / numHashes
-              if (est >= minEstJaccard) {
-                val (a, b, aN, bN) =
-                  if (otherId < d.doc_id) (otherId, d.doc_id, e.is_new, true)
-                  else (d.doc_id, otherId, true, e.is_new)
-                out += IncNearDupPair(a, b, math.round(est * 1e6) / 1e6,
-                  aN, bN, d.ts)
-              }
-            }
-          }
-          sigs.updateValue(d.doc_id, SeededSigEntry(d.sig, d.is_new))
-          n += 1
-        }
-      }
-      out.result().iterator
-    }
-  }
-
-  /** d8 as a stream: banding identical to [[minhashLshDedupStream]] (same
-    * kernel, same bucket identity), with [[IncrementalDedupProcessor]]
-    * holding the standing corpus in state. Emissions carry batch d8's
-    * is-new flags, one detection per colliding band — chain
+  /** d8 as a stream: MinHash signatures band into bucket keys exactly like
+    * the batch operators (same kernel, same raw-slice bucket identity, here
+    * rendered to a string key), and [[BandIndexProcessor]] holds the
+    * standing corpus in state, scoring by the equal-count Jaccard estimate
+    * (kept at ≥ `minEstJaccard`, rounded to 1e-6). Emissions carry batch
+    * d8's is-new flags, one detection per colliding band — chain
     * `dropDuplicatesWithinWatermark("a_id","b_id")` for one-row-per-pair,
     * as with the d2 twin.
     */
@@ -1739,7 +1621,7 @@ object StreamOps {
                              watermark: String = "10 seconds"): Dataset[IncNearDupPair] = {
     import spark.implicits._
     val rows = numHashes / bands
-    docs.toDF()
+    val banded = docs.toDF()
       .withWatermark("ts", watermark)
       .filter(size(split(col("text"), " ")) >= shingleSize)
       .select(col("doc_id"), col("ts"), col("is_new"),
@@ -1753,12 +1635,19 @@ object StreamOps {
           .as("bkey"),
         col("doc_id"), col("ts"), col("is_new"), col("sig"))
       .as[SeededBandedSig]
-      .groupByKey(_.bkey)
-      .transformWithState(
-        new IncrementalDedupProcessor(numHashes, minEstJaccard,
-          maxBucketSize, ttl),
-        if (ttl.isZero) TimeMode.EventTime() else TimeMode.ProcessingTime(),
-        OutputMode.Append())
+    val jaccard = (a: Array[Long], b: Array[Long]) => {
+      var eq = 0
+      var i = 0
+      while (i < numHashes) {
+        if (a(i) == b(i)) eq += 1
+        i += 1
+      }
+      val est = eq.toDouble / numHashes
+      if (est >= minEstJaccard) Some(math.round(est * 1e6) / 1e6) else None
+    }
+    bandIndexStream(spark, banded, jaccard, maxBucketSize, ttl)
+      .withColumnRenamed("score", "est_jaccard")
+      .as[IncNearDupPair]
   }
 
   /** Keyed consecutive-pair detection: emit (prev, cur) when the gap is

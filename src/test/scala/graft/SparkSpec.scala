@@ -28,6 +28,13 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  /** Runs `f` on the RocksDB state store provider, which the
+    * transformWithState operators require, then restores the provider.
+    */
+  def withRocksDb[T](f: => T): T = withConf(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(f)
+
   /** Run `f` with AQE disabled — the introspection mode PlanAudit uses
     * for PLANS.md, so every plan a spec pins matches what the audit
     * reports.

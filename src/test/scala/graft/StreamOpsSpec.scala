@@ -120,17 +120,6 @@ class StreamOpsSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  private def withRocksDb[T](body: => T): T = {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
   test("sessionize via timers: watermark passing the gap closes an idle key's session") {
     implicit val sqlCtx = spark.sqlContext
     withRocksDb {
@@ -436,7 +425,7 @@ class StreamOpsSpec extends SparkSpec {
   }
 
   test("minhash-LSH dedup stream: TTL mode pairs against checkpointed state") {
-    // nonzero TTL selects ProcessingTime mode (see LshDedupProcessor), so
+    // nonzero TTL selects ProcessingTime mode (see BandIndexProcessor), so
     // drive it with the same Trigger.Once-over-shared-checkpoint pattern
     // as the first-seen TTL spec: each run is one micro-batch; the second
     // run's pair can only come from MapState recovered off the checkpoint.

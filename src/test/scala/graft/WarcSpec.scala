@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.sql.Timestamp
 import java.util.zip.CRC32
 
-import org.apache.spark.sql.SaveMode
+import org.apache.spark.sql.{Dataset, SaveMode}
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
@@ -188,42 +188,34 @@ class WarcSpec extends SparkSpec {
     val (batch1, batch2) = all.splitAt(all.length / 2)
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val prevProvider =
-      spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[StreamOps.WarcChunk]
-    val q = StreamOps.warcRecordStream(spark, input.toDS())
-      .writeStream.format("memory").queryName("warc_stream_out")
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append).start()
-    try {
-      input.addData(batch1)
-      q.processAllAvailable()
-      val partial = spark.table("warc_stream_out").collect()
-      assert(partial.length < 3, "the straddling record must not emit early")
-      input.addData(batch2)
-      q.processAllAvailable()
-      val got = spark.table("warc_stream_out").collect()
-        .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("rec_offset"),
-          r.getAs[Long]("rec_len"), r.getAs[String]("target_uri"),
-          r.getAs[Int]("http_status"), r.getAs[Long]("html_len"),
-          r.getAs[Long]("html_crc32"))).sortBy(_._1).toSeq
-      // independent expectation from the BATCH parser over the whole
-      // container — stream reassembly must agree record-for-record
-      val want = Warc.parseWarc(container).map { r =>
-        val id = r.headers("warc-record-id")
-          .stripPrefix("<urn:graft:doc-").stripSuffix(">").toLong
-        val (status, body) = Warc.parseHttp(r.payload)
-        (id, r.offset, r.recLen, r.headers("warc-target-uri"), status,
-          body.length.toLong, crc(body))
-      }.sortBy(_._1)
-      assert(got == want, s"got=$got want=$want")
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withRocksDb {
+      val input = MemoryStream[StreamOps.WarcChunk]
+      val q = StreamOps.warcRecordStream(spark, input.toDS())
+        .writeStream.format("memory").queryName("warc_stream_out")
+        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append).start()
+      try {
+        input.addData(batch1)
+        q.processAllAvailable()
+        val partial = spark.table("warc_stream_out").collect()
+        assert(partial.length < 3, "the straddling record must not emit early")
+        input.addData(batch2)
+        q.processAllAvailable()
+        val got = spark.table("warc_stream_out").collect()
+          .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("rec_offset"),
+            r.getAs[Long]("rec_len"), r.getAs[String]("target_uri"),
+            r.getAs[Int]("http_status"), r.getAs[Long]("html_len"),
+            r.getAs[Long]("html_crc32"))).sortBy(_._1).toSeq
+        // independent expectation from the BATCH parser over the whole
+        // container — stream reassembly must agree record-for-record
+        val want = Warc.parseWarc(container).map { r =>
+          val id = r.headers("warc-record-id")
+            .stripPrefix("<urn:graft:doc-").stripSuffix(">").toLong
+          val (status, body) = Warc.parseHttp(r.payload)
+          (id, r.offset, r.recLen, r.headers("warc-target-uri"), status,
+            body.length.toLong, crc(body))
+        }.sortBy(_._1)
+        assert(got == want, s"got=$got want=$want")
+      } finally q.stop()
     }
   }
 
@@ -281,66 +273,52 @@ class WarcSpec extends SparkSpec {
       all.drop(2 * third))
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val prevProvider =
-      spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[StreamOps.WarcChunk]
-    val q = StreamOps.warcGzRecordStream(spark, input.toDS())
-      .writeStream.format("memory").queryName("warc_gz_stream_out")
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append).start()
-    try {
-      input.addData(batches(0))
-      q.processAllAvailable()
-      assert(spark.table("warc_gz_stream_out").count() < 3,
-        "a member whose trailer hasn't arrived must not emit")
-      input.addData(batches(1))
-      q.processAllAvailable()
-      input.addData(batches(2))
-      q.processAllAvailable()
-      val got = spark.table("warc_gz_stream_out").collect()
-        .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("rec_offset"),
-          r.getAs[Long]("rec_len"), r.getAs[String]("target_uri"),
-          r.getAs[Int]("http_status"), r.getAs[Long]("html_len"),
-          r.getAs[Long]("html_crc32"))).sortBy(_._1).toSeq
-      val want = Warc.parseWarc(plain).map { r =>
-        val id = r.headers("warc-record-id")
-          .stripPrefix("<urn:graft:doc-").stripSuffix(">").toLong
-        val (status, body) = Warc.parseHttp(r.payload)
-        (id, r.offset, r.recLen, r.headers("warc-target-uri"), status,
-          body.length.toLong, crc(body))
-      }.sortBy(_._1)
-      assert(got == want, s"got=$got want=$want")
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withRocksDb {
+      val input = MemoryStream[StreamOps.WarcChunk]
+      val q = StreamOps.warcGzRecordStream(spark, input.toDS())
+        .writeStream.format("memory").queryName("warc_gz_stream_out")
+        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append).start()
+      try {
+        input.addData(batches(0))
+        q.processAllAvailable()
+        assert(spark.table("warc_gz_stream_out").count() < 3,
+          "a member whose trailer hasn't arrived must not emit")
+        input.addData(batches(1))
+        q.processAllAvailable()
+        input.addData(batches(2))
+        q.processAllAvailable()
+        val got = spark.table("warc_gz_stream_out").collect()
+          .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("rec_offset"),
+            r.getAs[Long]("rec_len"), r.getAs[String]("target_uri"),
+            r.getAs[Int]("http_status"), r.getAs[Long]("html_len"),
+            r.getAs[Long]("html_crc32"))).sortBy(_._1).toSeq
+        val want = Warc.parseWarc(plain).map { r =>
+          val id = r.headers("warc-record-id")
+            .stripPrefix("<urn:graft:doc-").stripSuffix(">").toLong
+          val (status, body) = Warc.parseHttp(r.payload)
+          (id, r.offset, r.recLen, r.headers("warc-target-uri"), status,
+            body.length.toLong, crc(body))
+        }.sortBy(_._1)
+        assert(got == want, s"got=$got want=$want")
+      } finally q.stop()
     }
     // corruption mid-stream is loud, not a silent resync: a flipped
     // deflate byte fails the query (the batch parser's contract lifted
     // to the transport)
     val bad = gz.clone()
     bad(12) = (bad(12) ^ 0xff).toByte
-    val input2 = MemoryStream[StreamOps.WarcChunk]
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val q2 = StreamOps.warcGzRecordStream(spark, input2.toDS())
-      .writeStream.format("memory").queryName("warc_gz_bad_out")
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append).start()
-    try {
-      input2.addData(bad.grouped(64).toSeq.zipWithIndex.map { case (b, i) =>
-        StreamOps.WarcChunk(12L, ts, i.toLong, b)
-      })
-      val e = intercept[Exception](q2.processAllAvailable())
-      assert(e.getMessage != null)
-    } finally {
-      q2.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withRocksDb {
+      val input2 = MemoryStream[StreamOps.WarcChunk]
+      val q2 = StreamOps.warcGzRecordStream(spark, input2.toDS())
+        .writeStream.format("memory").queryName("warc_gz_bad_out")
+        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append).start()
+      try {
+        input2.addData(bad.grouped(64).toSeq.zipWithIndex.map { case (b, i) =>
+          StreamOps.WarcChunk(12L, ts, i.toLong, b)
+        })
+        val e = intercept[Exception](q2.processAllAvailable())
+        assert(e.getMessage != null)
+      } finally q2.stop()
     }
   }
 
@@ -364,36 +342,28 @@ class WarcSpec extends SparkSpec {
     }
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val prevProvider =
-      spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[StreamOps.WarcChunk]
-    val q = StreamOps.wetRecordStream(spark, input.toDS())
-      .writeStream.format("memory").queryName("wet_stream_out")
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append).start()
-    try {
-      input.addData(all)
-      q.processAllAvailable()
-      val got = spark.table("wet_stream_out").collect()
-        .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("container_id"),
-          r.getAs[Long]("rec_offset"), r.getAs[Long]("rec_len"),
-          r.getAs[String]("target_uri"), r.getAs[Long]("text_len"),
-          r.getAs[Long]("text_crc32"))).sortBy(_._1).toSeq
-      // batch w2 over the same docs in ONE shard (shardSize covers all)
-      val want = Warc.wetExtract(spark, dir, shardSize = 50)
-        .collect()
-        .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("shard_id"),
-          r.getAs[Long]("rec_offset"), r.getAs[Long]("rec_len"),
-          r.getAs[String]("target_uri"), r.getAs[Long]("text_len"),
-          r.getAs[Long]("text_crc32"))).sortBy(_._1).toSeq
-      assert(got == want, s"got=$got want=$want")
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withRocksDb {
+      val input = MemoryStream[StreamOps.WarcChunk]
+      val q = StreamOps.wetRecordStream(spark, input.toDS())
+        .writeStream.format("memory").queryName("wet_stream_out")
+        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append).start()
+      try {
+        input.addData(all)
+        q.processAllAvailable()
+        val got = spark.table("wet_stream_out").collect()
+          .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("container_id"),
+            r.getAs[Long]("rec_offset"), r.getAs[Long]("rec_len"),
+            r.getAs[String]("target_uri"), r.getAs[Long]("text_len"),
+            r.getAs[Long]("text_crc32"))).sortBy(_._1).toSeq
+        // batch w2 over the same docs in ONE shard (shardSize covers all)
+        val want = Warc.wetExtract(spark, dir, shardSize = 50)
+          .collect()
+          .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("shard_id"),
+            r.getAs[Long]("rec_offset"), r.getAs[Long]("rec_len"),
+            r.getAs[String]("target_uri"), r.getAs[Long]("text_len"),
+            r.getAs[Long]("text_crc32"))).sortBy(_._1).toSeq
+        assert(got == want, s"got=$got want=$want")
+      } finally q.stop()
     }
   }
 
@@ -406,35 +376,25 @@ class WarcSpec extends SparkSpec {
     val ts = java.sql.Timestamp.valueOf("2024-01-01 00:01:00")
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val prevProvider =
-      spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    // start() inside the try: the regression this test pins (TimeMode
-    // wiring reverted) THROWS at start, and the provider conf must still
-    // restore or every later streaming test inherits RocksDB
-    var q: org.apache.spark.sql.streaming.StreamingQuery = null
-    try {
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    // a start() that throws (the TimeMode wiring reverted) still leaves
+    // the provider restored: withRocksDb restores it on the way out
+    withRocksDb {
       val input = MemoryStream[StreamOps.WarcChunk]
       input.addData(Seq(StreamOps.WarcChunk(3L, ts, 0L, container)))
       // ONE micro-batch then stop: under ProcessingTime the engine keeps
       // scheduling batches for TTL expiry, so processAllAvailable (and
       // AvailableNow) never converge — Trigger.Once is the terminating
       // form for this mode (the StreamBench firstSeenTws exclusion)
-      q = StreamOps.warcRecordStream(spark, input.toDS(),
+      val q = StreamOps.warcRecordStream(spark, input.toDS(),
           ttl = java.time.Duration.ofHours(1))
         .writeStream.format("memory").queryName("warc_ttl_out")
         .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
         .trigger(org.apache.spark.sql.streaming.Trigger.Once()).start()
-      q.awaitTermination(120000L)
-      val got = spark.table("warc_ttl_out").collect()
-      assert(got.length == 1 && got.head.getAs[Long]("doc_id") == 1L)
-    } finally {
-      if (q != null) q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+      try {
+        q.awaitTermination(120000L)
+        val got = spark.table("warc_ttl_out").collect()
+        assert(got.length == 1 && got.head.getAs[Long]("doc_id") == 1L)
+      } finally q.stop()
     }
   }
 
@@ -587,41 +547,31 @@ class WarcSpec extends SparkSpec {
     }.toSeq
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val prevProvider =
-      spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[StreamOps.WarcChunk]
-    val q = StreamOps.warcRecordStream(spark, input.toDS()).toDF()
-      .writeStream.format("memory").queryName("warc_big_out")
-      .outputMode(OutputMode.Append).start()
-    try {
-      // all but the straddling record's final chunk first: nothing for
-      // doc 42 may emit while its payload is incomplete
-      val cut = all.length * 2 / 3
-      input.addData(all.take(cut))
-      q.processAllAvailable()
-      assert(spark.table("warc_big_out").count() == 0)
-      input.addData(all.drop(cut))
-      q.processAllAvailable()
-      val got = spark.table("warc_big_out").orderBy("doc_id").collect()
-        .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("rec_offset"),
-          r.getAs[Long]("rec_len"), r.getAs[Long]("html_crc32"))).toSeq
-      val want = Warc.parseWarc(container).map { r =>
-        val id = r.headers("warc-record-id")
-          .stripPrefix("<urn:graft:doc-").stripSuffix(">").toLong
-        val (_, body) = Warc.parseHttp(r.payload)
-        (id, r.offset, r.recLen, crc(body))
-      }.sortBy(_._1)
-      assert(got == want)
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withRocksDb {
+      val input = MemoryStream[StreamOps.WarcChunk]
+      val q = StreamOps.warcRecordStream(spark, input.toDS()).toDF()
+        .writeStream.format("memory").queryName("warc_big_out")
+        .outputMode(OutputMode.Append).start()
+      try {
+        // all but the straddling record's final chunk first: nothing for
+        // doc 42 may emit while its payload is incomplete
+        val cut = all.length * 2 / 3
+        input.addData(all.take(cut))
+        q.processAllAvailable()
+        assert(spark.table("warc_big_out").count() == 0)
+        input.addData(all.drop(cut))
+        q.processAllAvailable()
+        val got = spark.table("warc_big_out").orderBy("doc_id").collect()
+          .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("rec_offset"),
+            r.getAs[Long]("rec_len"), r.getAs[Long]("html_crc32"))).toSeq
+        val want = Warc.parseWarc(container).map { r =>
+          val id = r.headers("warc-record-id")
+            .stripPrefix("<urn:graft:doc-").stripSuffix(">").toLong
+          val (_, body) = Warc.parseHttp(r.payload)
+          (id, r.offset, r.recLen, crc(body))
+        }.sortBy(_._1)
+        assert(got == want)
+      } finally q.stop()
     }
   }
 
@@ -636,31 +586,31 @@ class WarcSpec extends SparkSpec {
       StreamOps.WarcChunk(4L, ts, i.toLong,
         if (i == 0) junk else (s"X-Pad-$i: zzzzzzzz\r\n" * 20).getBytes(UTF_8))
     }
+    // the same junk once more through the gz transport, as ONE gzip
+    // member: its inflated bytes reach the framing gate in one piece
+    val gzChunks = Seq(StreamOps.WarcChunk(4L, ts, 0L,
+      Warc.gzipMember(chunks.flatMap(_.bytes).toArray)))
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val prevProvider =
-      spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[StreamOps.WarcChunk]
-    val q = StreamOps.warcRecordStream(spark, input.toDS()).toDF()
-      .writeStream.format("memory").queryName("warc_junk_out")
-      .outputMode(OutputMode.Append).start()
-    try {
-      input.addData(chunks)
-      val e = intercept[Exception](q.processAllAvailable())
-      val msgs = Iterator.iterate(e: Throwable)(_.getCause)
-        .takeWhile(_ != null)
-        .map(t => Option(t.getMessage).getOrElse("")).mkString(" | ")
-      assert(msgs.contains("no complete header block") ||
-        msgs.contains("unframeable"), msgs)
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    type Transport = Dataset[StreamOps.WarcChunk] => Dataset[StreamOps.WarcRecordRow]
+    Seq[(String, Transport, Seq[StreamOps.WarcChunk])](
+      ("warc_junk_out", StreamOps.warcRecordStream(spark, _), chunks),
+      ("warc_gz_junk_out", StreamOps.warcGzRecordStream(spark, _), gzChunks)
+    ).foreach { case (name, transport, in) =>
+      withRocksDb {
+        val input = MemoryStream[StreamOps.WarcChunk]
+        val q = transport(input.toDS()).toDF()
+          .writeStream.format("memory").queryName(name)
+          .outputMode(OutputMode.Append).start()
+        try {
+          input.addData(in)
+          val e = intercept[Exception](q.processAllAvailable())
+          val msgs = Iterator.iterate(e: Throwable)(_.getCause)
+            .takeWhile(_ != null)
+            .map(t => Option(t.getMessage).getOrElse("")).mkString(" | ")
+          assert(msgs.contains("no complete header block") ||
+            msgs.contains("unframeable"), msgs)
+        } finally q.stop()
       }
     }
   }
@@ -899,33 +849,23 @@ class WarcSpec extends SparkSpec {
     // mixed container arbitrarily, expect exactly the response audits
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val prevProvider =
-      spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[StreamOps.WarcChunk]
-    val chunks = container.grouped(97).zipWithIndex.map { case (b, i) =>
-      StreamOps.WarcChunk(0L, Timestamp.valueOf("2024-01-01 00:01:00"),
-        i.toLong, b)
-    }.toSeq
-    val q = StreamOps.warcRecordStream(spark, input.toDS()).toDF()
-      .writeStream.format("memory").queryName("wmixed_stream_out")
-      .outputMode(OutputMode.Append).start()
-    try {
-      input.addData(chunks)
-      q.processAllAvailable()
-      val got = spark.table("wmixed_stream_out")
-        .orderBy("doc_id").collect()
-      assert(got.map(_.getAs[Long]("doc_id")).toSeq == Seq(10L, 11L))
-      assert(got.map(_.getAs[Long]("rec_offset")).toSeq == Seq(off10, off11))
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withRocksDb {
+      val input = MemoryStream[StreamOps.WarcChunk]
+      val chunks = container.grouped(97).zipWithIndex.map { case (b, i) =>
+        StreamOps.WarcChunk(0L, Timestamp.valueOf("2024-01-01 00:01:00"),
+          i.toLong, b)
+      }.toSeq
+      val q = StreamOps.warcRecordStream(spark, input.toDS()).toDF()
+        .writeStream.format("memory").queryName("wmixed_stream_out")
+        .outputMode(OutputMode.Append).start()
+      try {
+        input.addData(chunks)
+        q.processAllAvailable()
+        val got = spark.table("wmixed_stream_out")
+          .orderBy("doc_id").collect()
+        assert(got.map(_.getAs[Long]("doc_id")).toSeq == Seq(10L, 11L))
+        assert(got.map(_.getAs[Long]("rec_offset")).toSeq == Seq(off10, off11))
+      } finally q.stop()
     }
   }
 
