@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.Output.OutputOps
 import graft.operators.{Analytics, Curation, DataOps, Decontamination, DecisionSupport, Dedup, Html, Multimodal, Similarity, Telematics, TextAnalysis}
 
 /** Driver contract — see /root/repo/SURVEY.md §2 for the inventory. */
@@ -162,9 +161,9 @@ object SparkEntry {
     "m3_audio_chunks"      -> ((s: SparkSession, d: String) =>
       Multimodal.audioChunks(s, d).toDF().orderBy("doc_id", "chunk_idx")),
     "m7_scene_cuts"        -> ((s: SparkSession, d: String) =>
-      Multimodal.sceneCuts(s, d).toDF().orderedBy("doc_id", "scene_idx")),
+      Multimodal.sceneCuts(s, d).toDF().orderBy("doc_id", "scene_idx")),
     "m8_scene_keyframes"   -> ((s: SparkSession, d: String) =>
-      Multimodal.sceneKeyframes(s, d).toDF().orderedBy("doc_id", "scene_idx")),
+      Multimodal.sceneKeyframes(s, d).toDF().orderBy("doc_id", "scene_idx")),
     "c2_contamination_frac" -> ((s: SparkSession, d: String) =>
       Decontamination.contaminationFraction(s, d)),
     "i2_bm25_topk"         -> ((s: SparkSession, d: String) => TextAnalysis.bm25TopK(s, d)),

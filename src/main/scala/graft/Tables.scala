@@ -14,32 +14,9 @@ import org.apache.spark.sql.types.StructType
   * never a cached, pre-materialized copy.
   */
 object Tables {
-  /** Loads `name` from the sf dir — unless `spark.graft.bucketedDb` names
-    * a database that has the table, in which case the CATALOG table is
-    * returned instead. That table is typically `Sinks.writeBucketedFacts`'
-    * output, bucketed on the fact's recurring join key, so the SAME
-    * operator code then plans co-located fact⋈fact joins with zero
-    * shuffle exchange (see BucketingSpec / PLANS.md's bucketed-substrate
-    * delta). Default unset: plain parquet scans, pushdown intact. When
-    * the override is active the sf dir is ignored for tables the db
-    * holds — the caller owns keeping db and dir in sync.
-    */
-  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val db = spark.conf.get("spark.graft.bucketedDb", "")
-    if (db.nonEmpty) {
-      // Fail fast on a db that does not exist at all (a typo'd name, or
-      // writeBucketedFacts never ran): silently falling back to parquet
-      // would let a benchmark measure parquet under a "bucketed" label
-      // while substrate() tags memo keys with the db name. The per-table
-      // fallback below stays — the db intentionally holds only the
-      // bucketed FACT tables; dims keep their parquet scans.
-      require(spark.catalog.databaseExists(db),
-        s"spark.graft.bucketedDb='$db' but no such database exists — " +
-          "run Sinks.writeBucketedFacts first or unset the conf")
-      if (spark.catalog.tableExists(s"$db.$name")) spark.table(s"$db.$name")
-      else parquet(spark, s"$dir/$name.parquet")
-    } else parquet(spark, s"$dir/$name.parquet")
-  }
+  /** Loads `name` from the sf dir: `<dir>/<name>.parquet`. */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame =
+    parquet(spark, s"$dir/$name.parquet")
 
   /** What an inferred schema depends on besides the session: every leaf
     * file's (name, length, mtime) and the session's parquet settings.
@@ -88,17 +65,6 @@ object Tables {
       else Seq((s.getPath.toString, s.getLen, s.getModificationTime))
     }
 
-  /** The substrate the session currently resolves tables against —
-    * "parquet" or the bucketed db name. Memo-shared frames embed this in
-    * their cache keys so a frame built on one substrate is never served
-    * after the override flips mid-session (BucketingSpec and PlanAudit's
-    * delta section do exactly that flip).
-    */
-  def substrate(spark: SparkSession): String = {
-    val db = spark.conf.get("spark.graft.bucketedDb", "")
-    if (db.isEmpty) "parquet" else db
-  }
-
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")
   def customer(s: SparkSession, d: String): DataFrame  = table(s, d, "customer")
@@ -138,6 +104,13 @@ object Tables {
       case _ => raw // already a (micro-precision) timestamp
     }
   }
+  /** One row per document, and `doc_id` is unique (500 of 500 at sf0.01,
+    * 5,000 of 5,000 at sf0.1). c1–c3 (Decontamination) and p1–p4
+    * (Curation) rely on it: c1–c3, for one, emit per-document rows with
+    * no `distinct` or per-`doc_id` rollup, so a duplicated id would come
+    * out as duplicated output rows. The load asserts nothing; a
+    * hand-built dir must keep the invariant itself.
+    */
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 }

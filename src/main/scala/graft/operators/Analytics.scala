@@ -567,19 +567,13 @@ object Analytics {
     * reduces to |event_type| rows and broadcasts back, the clamp and
     * re-aggregate stay in one codegen'd stage.
     *
-    * `exact = true` (the oracle-checked form) uses Spark's exact
-    * `percentile`, which buffers every group value on one reducer — fine at
-    * test SF, NOT at fleet scale. The 100 TB call site is `exact = false`:
-    * `approx_percentile`'s fixed-size mergeable KLL-style sketch, same plan
-    * shape (tiny cutoff relation broadcast into one fact pass), bounded
-    * memory at any group size. Both engines interpolate exact percentiles
-    * linearly, so rounded cutoffs match the DuckDB oracle exactly.
+    * The cutoffs use Spark's exact `percentile`, which buffers every
+    * group value on one reducer. Both engines interpolate exact
+    * percentiles linearly, so rounded cutoffs match the DuckDB oracle
+    * exactly.
     */
-  def winsorizedStats(spark: SparkSession, dir: String,
-                      exact: Boolean = true): DataFrame = {
-    def pct(p: Double) =
-      if (exact) percentile(col("value"), lit(p))
-      else approx_percentile(col("value"), lit(p), lit(10000))
+  def winsorizedStats(spark: SparkSession, dir: String): DataFrame = {
+    def pct(p: Double) = percentile(col("value"), lit(p))
     val cuts = Tables.events(spark, dir)
       .groupBy(col("event_type"))
       .agg(pct(0.01).as("p01"), pct(0.99).as("p99"))

@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.{Doubles, Sketches, VectorFunctions}
-import graft.Output._
 
 /** Corpus-curation operators beyond the dedup family: normalization-aware
   * duplicate collapse, frequency heavy hitters, and the centroid-assignment
@@ -36,8 +35,7 @@ object Curation {
     */
   private[graft] def normFrame(spark: SparkSession, dir: String): DataFrame =
     graft.CacheRegistry.memoShared(
-      s"normframe:${spark.sparkContext.applicationId}:$dir:" +
-        s"${graft.Tables.substrate(spark)}")(
+      s"normframe:${spark.sparkContext.applicationId}:$dir")(
       Tables.documents(spark, dir)
         .select(col("doc_id"), normExpr.as("norm")))
 
@@ -57,7 +55,7 @@ object Curation {
         count_distinct(col("text")).as("n_variants"))
       .select(col("keep_id"), col("n_copies"), col("n_variants"),
         length(col("norm")).cast("long").as("norm_len"))
-      .orderedBy("keep_id")
+      .orderBy("keep_id")
 
   /** h1: frequency heavy hitters — (event_type, user_id) pairs whose count
     * is at least `minShare` of their type's total. Exact two-aggregate form:
@@ -258,7 +256,7 @@ object Curation {
     graft.CacheRegistry.memoShared(
       s"p2verdicts:${spark.sparkContext.applicationId}:$dir:$minWords:" +
         s"$maxWords:$minQuality:$minBlockLen:" +
-        s"${positiveSources.mkString(",")}:${graft.Tables.substrate(spark)}")(
+        positiveSources.mkString(","))(
       computeWebPipelineVerdicts(spark, dir, minWords, maxWords, minQuality,
         minBlockLen, positiveSources))
 
@@ -622,7 +620,7 @@ object Curation {
       .select(col("doc_id"), col("source"), col("text"))
       .withColumn("reason", blocklistReason)
       .select(col("doc_id"), (col("reason") === "ok").as("keep"), col("reason"))
-      .orderedBy("doc_id")
+      .orderBy("doc_id")
 
   /** x42b: the SAME blocklist gate with the lists as BROADCAST FRAMES —
     * the production shape x42's scaladoc promises (C4's word list is
@@ -678,7 +676,7 @@ object Curation {
             contains(lower(col("text")), lit("javascript")), "markup")
           .otherwise("ok"))
       .select(col("doc_id"), (col("reason") === "ok").as("keep"), col("reason"))
-      .orderedBy("doc_id")
+      .orderBy("doc_id")
   }
 
   /** Build the bit vector of a Bloom filter over `values` with the SAME
@@ -831,7 +829,7 @@ object Curation {
             contains(lower(col("text")), lit("javascript")), "markup")
           .otherwise("ok"))
       .select(col("doc_id"), (col("reason") === "ok").as("keep"), col("reason"))
-      .orderedBy("doc_id")
+      .orderBy("doc_id")
   }
 
   /** p3: the reputation feedback loop — x48's domain-reputation frame
@@ -888,7 +886,7 @@ object Curation {
           .otherwise(col("reason")))
       .select(col("doc_id"), col("domain"),
         (col("reason") === "ok").as("keep"), col("reason"))
-      .orderedBy("doc_id")
+      .orderBy("doc_id")
   }
 
   /** k1: centroid assignment — the clustering stage of SemDedup-style
@@ -1040,7 +1038,7 @@ object Curation {
           col("a_nrm"), col("b_nrm")), 6))
       .filter(col("cosim") >= minCosine)
       .select(col("centroid_id"), col("a_id"), col("b_id"), col("cosim"))
-      .orderedBy("a_id", "b_id")
+      .orderBy("a_id", "b_id")
   }
 
   /** e1: int8 scalar quantization audit — per label, the reconstruction
@@ -1186,7 +1184,7 @@ object Curation {
         // roundZ: a tiny negative log-ratio sum rounds to -0.0 in DuckDB but
         // 0.0 here — normalize so the byte-hash oracle compare agrees
         Doubles.roundZ(sum(col("lr")) / count(lit(1)), 4).as("dsir_weight"))
-      .orderedBy("doc_id")
+      .orderBy("doc_id")
   }
 
   /** x35: DSIR importance RESAMPLING — the step that turns x21's
@@ -1242,7 +1240,7 @@ object Curation {
         (col("start") / stride).cast("long").as("chunk_idx"),
         col("start"),
         least(col("wc") - col("start"), lit(window.toLong)).as("chunk_len"))
-      .orderedBy("doc_id", "chunk_idx")
+      .orderBy("doc_id", "chunk_idx")
   }
 
   /** The permutation key shared by x30/x31 — LCG → xor-fold → LCG, pure
@@ -1294,7 +1292,7 @@ object Curation {
           Window.partitionBy(col("shard_id"))
             .orderBy(col("shuffle_key"), col("doc_id"))).cast("long"))
       .select("shard_id", "pos_in_shard", "doc_id", "source", "shuffle_key")
-      .orderedBy("shard_id", "pos_in_shard")
+      .orderBy("shard_id", "pos_in_shard")
   }
 
   /** x36: deterministic stratified train/val/test split — assign EVERY
@@ -1324,7 +1322,7 @@ object Curation {
         .select(col("doc_id"), col("source"), permKey(col("doc_id")).as("split_key")),
       "doc_id", trainPct, valPct)
       .select("doc_id", "source", "split_key", "rnk", "split")
-      .orderedBy("doc_id")
+      .orderBy("doc_id")
 
   /** The two-phase bucket-rank split core shared by x36 (every doc) and
     * x37 (dedup-group representatives): given (idCol, source, split_key),
@@ -1406,7 +1404,7 @@ object Curation {
     docs.join(groups, "doc_id")
       .join(repSplit, "group_id")
       .select("doc_id", "source", "group_id", "split")
-      .orderedBy("doc_id")
+      .orderBy("doc_id")
   }
 
   /** x31: token-budget sampling — realize a mixture plan (x25's shares ×
@@ -1454,7 +1452,7 @@ object Curation {
             .rowsBetween(Window.unboundedPreceding, 0)))
       .withColumn("kept", col("cum_tokens") <= budget)
       .select("doc_id", "source", "wc", "pri", "cum_tokens", "kept")
-      .orderedBy("source", "pri", "doc_id")
+      .orderBy("source", "pri", "doc_id")
   }
 
   /** k4: cluster-quality diagnostics — per-cluster separation margins over
@@ -1589,7 +1587,7 @@ object Curation {
         when(col("fim"), expr("CAST(n - b AS BIGINT)")).otherwise(lit(0L))
           .as("suffix_len"),
         crc32(col("out").cast("binary")).as("out_crc32"))
-      .orderedBy("doc_id")
+      .orderBy("doc_id")
   }
 
   /** x50: chat-template serialization — the post-training (SFT) sibling
@@ -1657,7 +1655,7 @@ object Curation {
           .as("mask_frac_micros"),
         crc32(col("out").cast("binary")).as("out_crc32"),
         crc32(col("mask").cast("binary")).as("mask_crc32"))
-      .orderedBy("doc_id")
+      .orderBy("doc_id")
   }
 
   /** x51: preference-pair synthesis — the DPO/RLHF post-training
@@ -1713,7 +1711,7 @@ object Curation {
         length(col("partner_chosen")).cast("long").as("rejected_len"),
         crc32(col("out_chosen").cast("binary")).as("chosen_crc32"),
         crc32(col("out_rejected").cast("binary")).as("rejected_crc32"))
-      .orderedBy("doc_id")
+      .orderBy("doc_id")
   }
 
   /** The WEB end-to-end composition: p2's composed crawl-to-corpus
@@ -1887,8 +1885,7 @@ object Curation {
                            positiveSources: Seq[String]): DataFrame =
     graft.CacheRegistry.memoShared(
       s"clsScored:${spark.sparkContext.applicationId}:$dir:$dim:" +
-        s"$trainSample:$iters:$lrDiv:${positiveSources.mkString(",")}:" +
-        graft.Tables.substrate(spark)) {
+        s"$trainSample:$iters:$lrDiv:${positiveSources.mkString(",")}") {
       val wq = trainQualityWeights(spark, dir, dim, trainSample, iters,
         lrDiv, positiveSources)
       scoreQuality(
@@ -1948,7 +1945,7 @@ object Curation {
                         positiveSources: Seq[String] =
                           Seq("src0", "src1", "src2", "src3", "src4")): DataFrame =
     scoredCorpus(spark, dir, dim, trainSample, iters, lrDiv, positiveSources)
-      .orderedBy("doc_id")
+      .orderBy("doc_id")
 
   /** The training half of cls6: ONE-VS-REST multinomial over the `lang`
     * label — cls1's integer-grid hard-sigmoid machinery generalized to
@@ -2041,7 +2038,7 @@ object Curation {
                      dim: Int = 64, trainSample: Int = 4096,
                      iters: Int = 3, lrDiv: Int = 2): DataFrame =
     scoredLangFrame(spark, dir, dim, trainSample, iters, lrDiv)
-      .orderedBy("doc_id")
+      .orderBy("doc_id")
 
   /** cls6's scored frame WITHOUT the deterministic output sort — the
     * form downstream consumers take. Memo-shared on (dir, every
@@ -2055,7 +2052,7 @@ object Curation {
                                      iters: Int = 3, lrDiv: Int = 2): DataFrame =
     graft.CacheRegistry.memoShared(
       s"cls6scored:${spark.sparkContext.applicationId}:$dir:$dim:" +
-        s"$trainSample:$iters:$lrDiv:${graft.Tables.substrate(spark)}") {
+        s"$trainSample:$iters:$lrDiv") {
       val langs = TextAnalysis.markers.map(_._1)
       val ws = trainLangWeights(spark, dir, langs, dim, trainSample, iters,
         lrDiv)
@@ -2148,7 +2145,7 @@ object Curation {
     acceptPareto(
       scoredCorpus(spark, dir, dim, trainSample, iters, lrDiv, positiveSources)
         .select(col("doc_id"), col("source"), col("prob_micros")))
-      .orderedBy("doc_id")
+      .orderBy("doc_id")
 
   /** The full training-set composition a pretraining pipeline ships —
     * curatedCorpus's three keep-lists (d7 dedup ∧ x33 CCNet ∧ x31 budget)
@@ -2226,7 +2223,7 @@ object Curation {
         expr("(n_pos * 1000000) div n_docs").as("pos_rate_micros"))
       .withColumn("gap_micros",
         col("avg_prob_micros") - col("pos_rate_micros"))
-      .orderedBy("cal_bin")
+      .orderBy("cal_bin")
 
   /** cls3: calibration audit of the trained quality classifier — the
     * reliability table (Guo et al. 2017's ECE binning) that says whether
@@ -2312,7 +2309,7 @@ object Curation {
         when(col("precision_micros").isNotNull && col("recall_micros").isNotNull
             && col("precision_micros") + col("recall_micros") > 0,
           expr("(2 * precision_micros * recall_micros) div (precision_micros + recall_micros)")))
-      .orderedBy("threshold_micros")
+      .orderBy("threshold_micros")
   }
 
   /** cls4: decile-threshold sweep of the trained quality classifier —

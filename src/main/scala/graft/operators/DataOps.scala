@@ -127,15 +127,11 @@ object DataOps {
     * round-4 (roundZ normalizes −0.0 like the winsorize columns); the
     * rate is the exact truncating micro-unit division. Scale shape: two
     * percentile aggregates (types-sized output) + two types-sized
-    * broadcast joins — like q_winsorize, the exact percentile buffers
-    * per-group values, so a 100 TB deployment flips `exact = false` for
-    * the approx_percentile sketch (same plan, mergeable state).
+    * broadcast joins; like q_winsorize, the exact percentile buffers
+    * per-group values.
     */
-  def outlierAudit(spark: SparkSession, dir: String, k: Double = 3.0,
-                   exact: Boolean = true): DataFrame = {
-    def pct(c: org.apache.spark.sql.Column) =
-      if (exact) percentile(c, lit(0.5))
-      else approx_percentile(c, lit(0.5), lit(10000))
+  def outlierAudit(spark: SparkSession, dir: String, k: Double = 3.0): DataFrame = {
+    def pct(c: org.apache.spark.sql.Column) = percentile(c, lit(0.5))
     val ev = Tables.events(spark, dir)
       .filter(col("value").isNotNull) // the drift-family null rule
       .select(col("event_type"), col("value"))

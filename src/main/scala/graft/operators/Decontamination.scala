@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.Sketches
-import graft.Output._
 
 /** Benchmark decontamination — the training-data hygiene operator: flag
   * corpus documents that share any contiguous k-token shingle with a
@@ -49,7 +48,7 @@ object Decontamination {
           array_distinct(Sketches.shingleHash64(col("text"), k)),
           benchHashes).as("n_hit_shingles"))
       .filter(col("n_hit_shingles") > 0)
-      .orderedBy("doc_id")
+      .orderBy("doc_id")
   }
 
   /** The benchmark side of c1/c2/c3 as a standalone frame: the distinct
@@ -107,8 +106,7 @@ object Decontamination {
                                          k: Int = 8,
                                          benchSource: String = "src0"): DataFrame =
     graft.CacheRegistry.memoShared(
-      s"contamids:${spark.sparkContext.applicationId}:$dir:$k:$benchSource:" +
-        s"${Tables.substrate(spark)}")(
+      s"contamids:${spark.sparkContext.applicationId}:$dir:$k:$benchSource")(
       {
         // c1's fused-kernel form (round 18): any-hit verdict straight off
         // the scan — no explode, no probe join, no distinct exchange
@@ -158,7 +156,7 @@ object Decontamination {
         round(col("n_hit").cast("double") / col("n_shingles"), 6))
       .withColumn("contaminated",
         col("n_hit") * denom >= col("n_shingles"))
-      .orderedBy("doc_id")
+      .orderBy("doc_id")
   }
 
   /** x26: duplicated-span fraction — for each doc, the share of its
@@ -214,7 +212,7 @@ object Decontamination {
         col("n").cast("long").as("n_tokens"),
         size(kept).cast("long").as("n_kept"),
         array_join(kept, " ").as("text_clean"))
-      .orderedBy("doc_id")
+      .orderBy("doc_id")
   }
 
   /** c3: SURGICAL decontamination — instead of dropping a contaminated
@@ -269,7 +267,7 @@ object Decontamination {
         size(kept).cast("long").as("n_kept"),
         (size(kept) < col("n")).as("scrubbed"),
         array_join(kept, " ").as("text_clean"))
-      .orderedBy("doc_id")
+      .orderBy("doc_id")
   }
 
   def dupShingleFraction(spark: SparkSession, dir: String,
@@ -287,6 +285,6 @@ object Decontamination {
         sum((col("nd") > 1).cast("long")).as("n_dup_shingles"))
       .withColumn("dup_frac",
         round(col("n_dup_shingles").cast("double") / col("n_shingles"), 6))
-      .orderedBy("doc_id")
+      .orderBy("doc_id")
   }
 }

@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.{Sketches, VectorFunctions}
-import graft.Output._
 
 /** Deduplication family over the `documents` / `embeddings` tables — the
   * operators a large-scale training-data pipeline runs before anything else.
@@ -27,7 +26,7 @@ object Dedup {
       .groupBy(col("text"))
       .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
       .select("keep_id", "n_copies")
-      .orderedBy("keep_id")
+      .orderBy("keep_id")
 
   // --- MinHash machinery (d2) -----------------------------------------
 
@@ -82,7 +81,7 @@ object Dedup {
         (Sketches.equalCount(col("a_sig"), col("b_sig")).cast("double") / numHashes)
           .as("est_jaccard"))
       .filter(col("est_jaccard") >= minEstJaccard)
-      .orderedBy("a_id", "b_id")
+      .orderBy("a_id", "b_id")
   }
 
   /** d8: INCREMENTAL near-dup detection — the query a production pipeline
@@ -160,7 +159,7 @@ object Dedup {
           .as("est_jaccard"),
         col("a_new"), col("b_new"))
       .filter(col("est_jaccard") >= minEstJaccard)
-      .orderedBy("a_id", "b_id")
+      .orderBy("a_id", "b_id")
   }
 
   /** Over-cap (band, bucket) pairs of a banded frame — the d2/d8 bucket
@@ -303,7 +302,7 @@ object Dedup {
       // shrinks the distinct's shuffle to true near-dups only
       .filter(col("hamming") <= maxHamming)
       .distinct()
-      .orderedBy("a_id", "b_id")
+      .orderBy("a_id", "b_id")
   }
 
   /** Distinct word sets per document, lexicographically sorted (the order
@@ -417,8 +416,7 @@ object Dedup {
   def ngramJaccard(spark: SparkSession, dir: String,
                    minJaccard: Double = 0.8): DataFrame =
     graft.CacheRegistry.memoShared(
-      s"d4scored:${spark.sparkContext.applicationId}:$dir:$minJaccard:" +
-        graft.Tables.substrate(spark))(
+      s"d4scored:${spark.sparkContext.applicationId}:$dir:$minJaccard")(
       computeNgramJaccard(spark, dir, minJaccard))
 
   private def computeNgramJaccard(spark: SparkSession, dir: String,
@@ -439,7 +437,7 @@ object Dedup {
         round(col("c").cast("double") / (col("na") + col("nb") - col("c")), 6))
       .filter(col("jaccard") >= minJaccard)
       .select("a_id", "b_id", "jaccard")
-      .orderedBy("a_id", "b_id")
+      .orderBy("a_id", "b_id")
   }
 
   /** The x40 threshold grid — one Scala definition interpolated into BOTH
@@ -531,8 +529,7 @@ object Dedup {
   def dedupGroups(spark: SparkSession, dir: String,
                   minJaccard: Double = 0.8, maxIters: Int = 20): DataFrame =
     graft.CacheRegistry.memoShared(
-      s"d6groups:${spark.sparkContext.applicationId}:$dir:$minJaccard:" +
-        s"$maxIters:${graft.Tables.substrate(spark)}")(
+      s"d6groups:${spark.sparkContext.applicationId}:$dir:$minJaccard:$maxIters")(
       computeDedupGroups(spark, dir, minJaccard, maxIters))
 
   private def computeDedupGroups(spark: SparkSession, dir: String,
@@ -614,7 +611,7 @@ object Dedup {
         col("doc_id") === col("l_id"), "left")
       .select(col("doc_id"),
         coalesce(col("group_id"), col("doc_id")).as("group_id"))
-      .orderedBy("doc_id")
+      .orderBy("doc_id")
   }
 
   /** d7: the dedup *decision* — one row per document with its transitive
@@ -627,7 +624,7 @@ object Dedup {
     dedupGroups(spark, dir, minJaccard)
       .select(col("doc_id"), col("group_id"),
         (col("doc_id") === col("group_id")).as("keep"))
-      .orderedBy("doc_id")
+      .orderBy("doc_id")
 
   /** Degree-oriented directed edge list from an undirected pair list
     * (a_id < b_id, each pair once): every edge points from its
@@ -684,7 +681,7 @@ object Dedup {
       .select(explode(array(col("u"), col("v"), col("w"))).as("doc_id"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_triangles"))
-      .orderedBy("doc_id")
+      .orderBy("doc_id")
   }
 
   /** g1: per-document triangle participation over the d4 near-dup graph —
@@ -784,7 +781,7 @@ object Dedup {
           col("a_nrm"), col("b_nrm")), 6))
       .filter(col("cosim") >= minCosine)
       .select("a_id", "b_id", "cosim")
-      .orderedBy("a_id", "b_id")
+      .orderBy("a_id", "b_id")
   }
 
   /** d5: embedding-cosine near-dup pairs, blocked by label (the coarse
@@ -895,7 +892,7 @@ object Dedup {
       .join(degN, col("id") === col("src"))
       .select(col("id").as("doc_id"), col("deg"), col("pr").as("pr_micros"),
         (col("pr").cast("double") / lit(1000000000000.0)).as("pagerank"))
-      .orderedBy("doc_id")
+      .orderBy("doc_id")
   }
 
   /** pageRankCore for STRING-keyed vertices (g3's canonical URLs): every
@@ -953,7 +950,7 @@ object Dedup {
           .as("doc_id"),
         col("deg"), col("pr").as("pr_micros"),
         (col("pr").cast("double") / lit(1000000000000.0)).as("pagerank"))
-      .orderedBy("doc_id")
+      .orderBy("doc_id")
   }
 
   /** Fixed-superstep run (the g2 oracle form): `iters` lazy supersteps,
@@ -1027,6 +1024,6 @@ object Dedup {
         // bit-deterministic; 1/1024-style half-boundary cases make round
         // the only divergence risk
         (lit(1.0) / col("group_size")).as("weight"))
-      .orderedBy("doc_id")
+      .orderBy("doc_id")
   }
 }

@@ -9,7 +9,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.Output._
 
 /** x41: HTML / boilerplate extraction — the stage every web-scale corpus
   * runs before any text-quality or dedup operator sees a character
@@ -610,7 +609,7 @@ object Html {
         auditRow(id, buildHtml(id, text), minLen, blocker)
       })
       .toDF()
-      .orderedBy("doc_id")
+      .orderBy("doc_id")
   }
 
   /** x45: the parsed outlink graph — every anchor href on the page,
@@ -628,7 +627,7 @@ object Html {
     */
   def outlinkGraph(spark: SparkSession, dir: String,
                    blocker: HtmlBlocker = TagWalkBlocker): DataFrame =
-    outlinkEdges(spark, dir, blocker).orderedBy("doc_id", "href")
+    outlinkEdges(spark, dir, blocker).orderBy("doc_id", "href")
 
   /** x45's edge frame WITHOUT the deterministic output sort — the form
     * g3 consumes. Memo-shared on (dir, blocker): x45 and g3 both start
@@ -643,7 +642,7 @@ object Html {
                                   blocker: HtmlBlocker = TagWalkBlocker): DataFrame =
     graft.CacheRegistry.memoShared(
       s"x45edges:${spark.sparkContext.applicationId}:$dir:" +
-        s"${blocker.getClass.getName}:${graft.Tables.substrate(spark)}") {
+        blocker.getClass.getName) {
       import spark.implicits._
       Tables.documents(spark, dir)
         .select(col("doc_id"), col("text"))

@@ -7,7 +7,6 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.Output._
 
 /** Multimodal-column plumbing: media payloads travel as opaque `binary`
   * columns with typed metadata alongside; decode / feature-extraction runs
@@ -829,7 +828,7 @@ object Multimodal {
       .mapPartitions(_.map(decode))(
         org.apache.spark.sql.Encoders.product[MediaMeta])
       .toDF()
-      .orderedBy("doc_id")
+      .orderBy("doc_id")
 
   /** m6: exact media dedup — byte-identical payload detection by
     * (media_type, byte_len, crc32), the first pass every multimodal
@@ -870,7 +869,7 @@ object Multimodal {
       .groupBy(col("media_type"), col("byte_len"), col("crc32"))
       .agg(min(col("doc_id")).as("keep_id"),
         count(lit(1)).as("n_copies"))
-      .orderedBy("media_type", "keep_id")
+      .orderBy("media_type", "keep_id")
   }
 
   // --- the pixel seam (m4) ----------------------------------------------
@@ -1018,7 +1017,7 @@ object Multimodal {
         }
       })
       .toDF()
-      .orderedBy("doc_id")
+      .orderBy("doc_id")
   }
 
   /** One image's fixed-size thumbnail digest. */
@@ -1073,7 +1072,7 @@ object Multimodal {
         }
       })
       .toDF()
-      .orderedBy("doc_id")
+      .orderBy("doc_id")
   }
 
   /** m9: the perceptual media near-dup AUDIT — the companion to m6's exact
@@ -1102,7 +1101,7 @@ object Multimodal {
     bandedHashPairs(imageHashes(spark, dir, decoder)
         .select("doc_id", "ahash64"), maxBucketSize)
       .withColumn("near_dup", col("hamming") <= maxHamming)
-      .orderedBy("a_id", "b_id")
+      .orderBy("a_id", "b_id")
 
   /** All DISTINCT band-sharing fingerprint pairs with exact hamming —
     * the candidate stage `imageNearDupPairs` and m9 share. `maxBucketSize`
@@ -1155,5 +1154,5 @@ object Multimodal {
                         maxBucketSize: Int = Int.MaxValue): DataFrame =
     bandedHashPairs(hashes, maxBucketSize)
       .filter(col("hamming") <= maxHamming)
-      .orderedBy("a_id", "b_id")
+      .orderBy("a_id", "b_id")
 }

@@ -61,7 +61,7 @@ object Similarity {
   }
 
   /** The neq-id brute-force ranked substrate, projected to the narrow
-    * audit columns and memo-shared on (dir, substrate) — s1, s4, i4 and
+    * audit columns and memo-shared on dir — s1, s4, i4 and
     * i5 all start from this frame (the d4/cls6 family convention), so a
     * harness pass pays the O(|corpus|·|queries|) scoring exactly once:
     * the alphabetically-first consumer (i4) owns the build, the others
@@ -71,8 +71,7 @@ object Similarity {
     */
   private def rankedNeqId(spark: SparkSession, dir: String): DataFrame =
     graft.CacheRegistry.memoShared(
-      s"s1ranked:${spark.sparkContext.applicationId}:$dir:" +
-        s"${graft.Tables.substrate(spark)}")(
+      s"s1ranked:${spark.sparkContext.applicationId}:$dir")(
       rankedAgainstQueries(spark, dir, col("n_id") =!= col("q_id"))
         .select("q_id", "q_label", "n_id", "n_label", "cosim", "rnk"))
 
@@ -165,7 +164,7 @@ object Similarity {
       .orderBy("q_id", "rnk")
 
   /** The IVF ranked-candidate substrate (narrow projection), memo-
-    * shared on (dir, kCells, nProbe, substrate) — s3 and i5 both start
+    * shared on (dir, kCells, nProbe) — s3 and i5 both start
     * here, so one harness pass pays the cell-assignment/probe/re-rank
     * chain once: i5 (alphabetically first) owns the build, s3 times
     * its top-k cut.
@@ -173,8 +172,7 @@ object Similarity {
   private def ivfRanked(spark: SparkSession, dir: String,
                         kCells: Int, nProbe: Int): DataFrame =
     graft.CacheRegistry.memoShared(
-      s"s3ranked:${spark.sparkContext.applicationId}:$dir:$kCells:" +
-        s"$nProbe:${graft.Tables.substrate(spark)}")(
+      s"s3ranked:${spark.sparkContext.applicationId}:$dir:$kCells:$nProbe")(
       ivfKmeansRanked(spark, dir, kCells, nProbe)
         .select("q_id", "q_label", "n_id", "n_label", "cosim", "rnk"))
 

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Output.OutputOps
 import graft.Tables
 import graft.functions.{Doubles, RollingHash, Sketches}
 
@@ -117,31 +116,16 @@ object TextAnalysis {
     * Scale shape: one scan → one (source, lang) count (tiny) + one
     * per-source aggregate. The exact `count(DISTINCT text)` is the one
     * data-proportional exchange (text-hash partitioned, the same cost
-    * class as d1); at fleet scale the same frame takes
-    * `approx_count_distinct` (the q8 sketch path) or d1's digest
-    * pre-hash — a column swap, not a plan change. That swap is shipped
-    * behind `spark.graft.approxDistinct` (see graft.Output): default
-    * false keeps the exact oracle contract; true serves the HLL++
-    * estimate in the same schema.
+    * class as d1).
     */
   def sourceDatasheet(spark: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(spark, dir)
       .select(col("source"), col("lang"), col("text"), col("n_chars"))
-    // the conf-gated swap the scaladoc promises: exact count(DISTINCT
-    // text) for the oracle contract (default), HLL++ estimate under
-    // `spark.graft.approxDistinct=true` — the production posture, where
-    // the text-hash exchange (the datasheet's ONE data-proportional
-    // shuffle) collapses into the partial-aggregable sketch merge.
-    // n_langs stays exact either way: its domain is bounded (a language
-    // inventory), so sketching it saves nothing.
-    val uniq =
-      if (graft.Output.approxDistinct(spark)) approx_count_distinct(col("text"))
-      else countDistinct(col("text"))
     val base = d.groupBy(col("source")).agg(
       count(lit(1)).as("n_docs"),
       sum(col("n_chars")).as("n_chars"),
       sum(size(split(col("text"), " ")).cast("long")).as("n_tokens"),
-      uniq.as("n_uniq"),
+      countDistinct(col("text")).as("n_uniq"),
       countDistinct(col("lang")).as("n_langs"))
     val topLang = d.groupBy(col("source"), col("lang"))
       .agg(count(lit(1)).as("ln"))
@@ -158,15 +142,9 @@ object TextAnalysis {
         expr("n_chars div n_docs").as("avg_chars"),
         col("n_langs"), col("top_lang"),
         expr("(top_n * 1000000) div n_docs").as("top_lang_micros"),
-        // clamped at zero: exact mode can never go negative (n_uniq <=
-        // n_docs by construction, so the clamp is a no-op and the oracle
-        // hash is untouched), but the HLL++ estimate under approxDistinct
-        // routinely OVERestimates — a dup-free source must report 0 dup
-        // docs, not a negative count
-        greatest(lit(0L), col("n_docs") - col("n_uniq")).as("dup_docs"),
-        expr("(greatest(0L, n_docs - n_uniq) * 1000000) div n_docs")
-          .as("dup_rate_micros"))
-      .orderedBy("source")
+        (col("n_docs") - col("n_uniq")).as("dup_docs"),
+        expr("((n_docs - n_uniq) * 1000000) div n_docs").as("dup_rate_micros"))
+      .orderBy("source")
   }
 
   /** x5: unigram log-probability scoring — the perplexity-style fluency
@@ -728,8 +706,7 @@ object TextAnalysis {
                            wordFreq: => DataFrame,
                            driverVocabCap: Long = DriverVocabCap): Seq[(Int, String, String, Long)] =
     graft.CacheRegistry.memoSharedValue(
-      s"bpe:${spark.sparkContext.applicationId}:$dir:$merges:" +
-        s"$driverVocabCap:${graft.Tables.substrate(spark)}")(
+      s"bpe:${spark.sparkContext.applicationId}:$dir:$merges:$driverVocabCap")(
       learnMerges(spark, wordFreq, merges, driverVocabCap))
 
   // pair separator inside the argmax key: NUL can never occur in a symbol
@@ -1034,7 +1011,7 @@ object TextAnalysis {
         }
       }
       .toDF("doc_id", "n_tokens", "ids_crc32")
-      .orderedBy("doc_id")
+      .orderBy("doc_id")
   }
 
   /** i2: BM25 top-k retrieval — score every document against a term query

@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.Output._
 
 /** x43: URL canonicalization + URL-level dedup — the crawl-frontier stage
   * every web pipeline runs BEFORE any content operator (C4/CCNet dedupe
@@ -328,7 +327,7 @@ object Urls {
         (id, domain, path, rule, allowed)
       })
       .toDF("doc_id", "domain", "path", "matched_rule", "allowed")
-      .orderedBy("doc_id")
+      .orderBy("doc_id")
   }
 
   /** The robots identity of a CANONICAL url: (bare host, path before the
@@ -404,7 +403,7 @@ object Urls {
       .withColumn("scheduled_ms", (col("slot") - 1) * col("delay_ms"))
       .select(col("doc_id"), col("domain"), col("canon_url"), col("slot"),
         col("delay_ms"), col("scheduled_ms"))
-      .orderedBy("doc_id")
+      .orderBy("doc_id")
   }
 
   /** x43: per-document raw + canonical URL with the frontier-dedup
@@ -427,6 +426,6 @@ object Urls {
       .select(col("doc_id"), col("url"), col("canon_url"),
         col("keep_id"), (col("doc_id") === col("keep_id")).as("is_canonical"),
         col("n_copies"))
-      .orderedBy("doc_id")
+      .orderBy("doc_id")
   }
 }

@@ -22,12 +22,6 @@ object Sinks {
   def writeJsonl(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").json(path)
 
-  /** ORC output — parquet's columnar sibling, same pushdown/pruning story,
-    * for consumers standardized on the ORC stack.
-    */
-  def writeOrc(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").orc(path)
-
   /** Exactly one CSV *file* at `file` (not a directory) — byte-for-byte the
     * shape of the reference's `writeAsCsv(..., OVERWRITE).setParallelism(1)`
     * sink, so its downstream consumers need no change. Writes a temp
@@ -61,81 +55,6 @@ object Sinks {
       .option("checkpointLocation", checkpoint)
       .outputMode("append")
       .start()
-
-  /** Hive-style partitioned parquet: one directory per partition-column
-    * value (`day=2024-01-01/...`). At fleet scale this IS the table layout —
-    * readers with a partition-column predicate scan only matching
-    * directories (partition pruning; see SinksSpec for the plan proof) and
-    * backfills overwrite single partitions, not the table.
-    */
-  def writePartitionedParquet(df: DataFrame, path: String,
-                              partitionCols: Seq[String]): Unit =
-    df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
-
-  /** Materialize the big fact tables as BUCKETED catalog tables — the
-    * co-located-join substrate for the recurring fact⋈fact paths:
-    * lineitem and orders bucket (and sort) on the order key, the join
-    * axis q12/q18/q21 shuffle on every run today, and events buckets on
-    * (user-keyed) `user_id`, the t-family/session/funnel axis. Pair with
-    * `spark.graft.bucketedDb = <db>`: Tables then serves these catalog
-    * tables to the UNCHANGED operators, whose order-key joins plan with
-    * zero shuffle exchange (BucketingSpec pins it; PLANS.md's
-    * bucketed-substrate section shows the per-query delta). At 100 TB
-    * this converts every recurring fact⋈fact join from a full network
-    * shuffle into local merges — paid once at ingest, amortized over
-    * every downstream query.
-    *
-    * Must run with the override conf UNSET (it reads the parquet dirs
-    * through Tables — with the conf live, an overwrite would read a
-    * table into itself).
-    *
-    * `db` is rebuilt from scratch: dropped from the catalog, and its
-    * warehouse directory deleted. The directory outlives the in-memory
-    * catalog, so in a fresh JVM an "overwrite" is really a CREATE that
-    * dies on the stale LOCATION.
-    */
-  def writeBucketedFacts(spark: org.apache.spark.sql.SparkSession,
-                         dir: String, db: String = "graft_bucketed",
-                         buckets: Int = 32,
-                         tables: Seq[String] =
-                           Seq("lineitem", "orders", "events")): Unit = {
-    // The wipe below is recursive: a name holding '/' or '..' would walk
-    // outside the warehouse. Require a bare identifier before any path or
-    // SQL is built from it.
-    require(db.matches("[A-Za-z0-9_]+"),
-      s"the bucketed database must be a bare identifier ([A-Za-z0-9_]+), got '$db'")
-    require(spark.conf.get("spark.graft.bucketedDb", "").isEmpty,
-      "unset spark.graft.bucketedDb before writeBucketedFacts — the " +
-        "override would make the overwrite read a table into itself")
-    val unknown = tables.toSet -- Set("lineitem", "orders", "events")
-    require(unknown.isEmpty, s"unknown fact tables: ${unknown.mkString(",")}")
-    spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
-    // Spark stores unquoted db names lowercased: <warehouse>/<lowercase>.db
-    val wh = java.nio.file.Paths.get(
-      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"),
-      s"${db.toLowerCase(java.util.Locale.ROOT)}.db")
-    if (java.nio.file.Files.exists(wh)) {
-      val walk = java.nio.file.Files.walk(wh)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.delete(p))
-      finally walk.close()
-    }
-    spark.sql(s"CREATE DATABASE $db")
-    if (tables.contains("lineitem"))
-      graft.Tables.lineitem(spark, dir).write.mode("overwrite")
-        .bucketBy(buckets, "l_orderkey").sortBy("l_orderkey")
-        .saveAsTable(s"$db.lineitem")
-    if (tables.contains("orders"))
-      graft.Tables.orders(spark, dir).write.mode("overwrite")
-        .bucketBy(buckets, "o_orderkey").sortBy("o_orderkey")
-        .saveAsTable(s"$db.orders")
-    // events keeps Tables.events' normalized micro-precision TIMESTAMP,
-    // so the catalog copy round-trips through the loader unchanged
-    if (tables.contains("events"))
-      graft.Tables.events(spark, dir).write.mode("overwrite")
-        .bucketBy(buckets, "user_id").sortBy("user_id", "ts")
-        .saveAsTable(s"$db.events")
-  }
 
   /** Training-shard writer: the curated corpus as reproducible, size-bounded
     * parquet shards — one directory per partition value, at most

@@ -40,10 +40,6 @@ object EventSources {
             schema: StructType): DataFrame =
     spark.read.schema(schema).json(path)
 
-  /** Batch ORC read — same pushdown/pruning story as parquet. */
-  def orc(spark: SparkSession, path: String): DataFrame =
-    spark.read.orc(path)
-
   /** Deterministic synthetic event stream from the rate-micro-batch source
     * (fixed rows per batch, timestamps derived from a fixed epoch) — the
     * load-generator source for soak-testing operators without input files.

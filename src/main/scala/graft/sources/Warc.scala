@@ -7,7 +7,6 @@ import java.util.zip.CRC32
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Output._
 import graft.Tables
 import graft.operators.{Html, Urls}
 
@@ -1086,7 +1085,7 @@ object Warc {
       }
       .toDF("doc_id", "shard_id", "rec_offset", "rec_len", "target_uri",
         "text_len", "text_crc32")
-      .orderedBy("doc_id")
+      .orderBy("doc_id")
   }
 
   /** Write the synthesized sharded corpus to disk as REAL `.warc`
@@ -1315,7 +1314,7 @@ object Warc {
       .toDF("shard_id", "warc_type", "rec_len")
       .groupBy("shard_id", "warc_type")
       .agg(count(lit(1)).as("n_records"), sum("rec_len").as("total_bytes"))
-      .orderedBy("shard_id", "warc_type")
+      .orderBy("shard_id", "warc_type")
   }
 
   private[graft] def readWarcFileRecords(spark: SparkSession,
@@ -1470,7 +1469,7 @@ object Warc {
   def warcFileRoundTrip(spark: SparkSession, dir: String,
                         shardSize: Int = 50, gz: Boolean = false): DataFrame =
     warcFileIngest(spark, stagedWarcDir(spark, dir, shardSize, gz))
-      .orderedBy("doc_id")
+      .orderBy("doc_id")
 
   /** w4: the GZIPPED file-backed round trip — w3 with the containers
     * staged as real `.warc.gz` files (one gzip member per record, the
@@ -1544,7 +1543,7 @@ object Warc {
         pointReadFile(file, bytes)
       })
       .toDF(AuditCols: _*)
-      .orderedBy("doc_id")
+      .orderBy("doc_id")
   }
 
   /** Fetch ONE gzip member's compressed bytes by a POSITIONED read of
@@ -1675,7 +1674,7 @@ object Warc {
         finally in.close()
       })
       .toDF(AuditCols: _*)
-      .orderedBy("doc_id")
+      .orderBy("doc_id")
   }
 
   /** w1: synthesize the sharded WARC corpus, parse it back through the
@@ -1700,6 +1699,6 @@ object Warc {
         }
       }
       .toDF(AuditCols: _*)
-      .orderedBy("doc_id")
+      .orderBy("doc_id")
   }
 }

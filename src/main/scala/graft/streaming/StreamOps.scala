@@ -1268,17 +1268,6 @@ object StreamOps {
         TimeMode.EventTime(), OutputMode.Append())
   }
 
-  /** Stream–static enrichment join: every micro-batch decorates the
-    * unbounded stream with a bounded dimension. The static side broadcasts,
-    * so the stream side never shuffles — the streaming twin of the batch
-    * broadcast-dim joins (q3/q5/q10). A parquet dim is snapshot per batch
-    * by the source's file listing; a dimension too large to broadcast
-    * becomes a stream–stream join or a state-store lookup instead.
-    */
-  def enrichWithDim(stream: DataFrame, dim: DataFrame,
-                    key: String): DataFrame =
-    stream.join(org.apache.spark.sql.functions.broadcast(dim), key)
-
   // --- Streaming twins of the round-2 curation analytics ---------------
 
   case class Doc(doc_id: Long, ts: Timestamp, source: String, n_tokens: Long)

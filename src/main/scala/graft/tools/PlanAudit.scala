@@ -60,38 +60,6 @@ object PlanAudit {
     graft.CacheRegistry.releaseShared()
     graft.CacheRegistry.releaseAll()
 
-    // Bucketed-substrate delta: the same fact⋈fact queries re-planned
-    // against Sinks.writeBucketedFacts' catalog tables (lineitem/orders
-    // bucketed on the order key). Broadcast is disabled for BOTH columns
-    // so the SMJ exchange bucketing elides — the join that broadcasts at
-    // this SF but shuffles at fleet scale — is what's compared.
-    sb ++= "\n## Bucketed-substrate delta (spark.graft.bucketedDb)\n"
-    sb ++= "Shuffle-exchange counts with autoBroadcastJoinThreshold=-1:\n"
-    sb ++= "parquet scans vs writeBucketedFacts' order-key-bucketed\n"
-    sb ++= "catalog tables, same operator code (Tables override).\n\n"
-    sb ++= "| query | parquet | bucketed |\n| --- | --- | --- |\n"
-    try {
-      // only the two facts the compared queries join — skipping the
-      // events rewrite keeps the audit cheap
-      graft.sinks.Sinks.writeBucketedFacts(spark, dir, "graft_plan_bkt", 4,
-        Seq("lineitem", "orders"))
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      Seq("q12_late_shipments", "q18_large_orders", "q21_blame_supplier")
-        .foreach { name =>
-          val fn = SparkEntry.queries(name)
-          val plain = PlanCounts(fn(spark, dir).queryExecution.executedPlan)
-          spark.conf.set("spark.graft.bucketedDb", "graft_plan_bkt")
-          val bkt = PlanCounts(fn(spark, dir).queryExecution.executedPlan)
-          spark.conf.unset("spark.graft.bucketedDb")
-          sb ++= s"| `$name` | ${plain.shuffles} | ${bkt.shuffles} |\n"
-        }
-    } catch { case e: Throwable =>
-      sb ++= s"| (section failed: ${e.getMessage}) | - | - |\n"
-    } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.unset("spark.graft.bucketedDb")
-    }
-
     Files.writeString(Paths.get(out), sb.toString)
     println(s"[plan-audit] wrote $out")
     spark.stop()

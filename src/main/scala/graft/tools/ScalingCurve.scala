@@ -18,9 +18,7 @@ import graft.operators.{Curation, Similarity}
   * chain's build cost and d6/d7/g1 time their marginals, matching
   * BASELINE.md's family-sum convention.
   *
-  * Environment: `SPARK_GRAFT_CONF="k1=v1,k2=v2"` adds session confs;
-  * `SPARK_GRAFT_BUCKETED=<db>` builds Sinks.writeBucketedFacts' catalog
-  * tables from each slice (untimed) and times the queries against them.
+  * Environment: `SPARK_GRAFT_CONF="k1=v1,k2=v2"` adds session confs.
   *
   *   sbt "runMain graft.tools.ScalingCurve 3 1:/root/testdata/sf0.1 10:/tmp/sfx10"
   *   sbt "runMain graft.tools.ScalingCurve 3 1:/root/testdata/sf0.1 q1_pricing_summary"
@@ -87,15 +85,6 @@ object ScalingCurve {
 
     a.slices.foreach { case (m, dir) =>
       Bench.warmUp(spark, dir)
-      // Bucketed-substrate mode: the in-memory catalog does not survive
-      // JVMs, so the tables are built in THIS session, outside any timing —
-      // the substrate a real deployment amortizes across many queries.
-      sys.env.get("SPARK_GRAFT_BUCKETED").foreach { db =>
-        spark.conf.unset("spark.graft.bucketedDb")
-        graft.sinks.Sinks.writeBucketedFacts(spark, dir, db)
-        spark.conf.set("spark.graft.bucketedDb", db)
-        println(s"[scaling] bucketed substrate '$db' built from $dir")
-      }
       // sorted run order = graft.Bench's alphabetical pass order, so
       // memo-family build OWNERSHIP matches the pin convention (i4 owns
       // the neq-id ranking, i5 the IVF chain, d4 the scored pairs, cls6

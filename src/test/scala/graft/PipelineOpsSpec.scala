@@ -357,14 +357,10 @@ class PipelineOpsSpec extends SparkSpec {
       (None, 2L, "de")), s"got ${got.toSeq}")
   }
 
-  test("x38 datasheet: spark.graft.approxDistinct swaps the exact text-distinct for HLL++") {
+  test("x38 datasheet: exact text-distinct via Expand counts byte-identical dups") {
     import spark.implicits._
     val dir = tempSfDir()
-    // 4 docs, 3 distinct texts: exact mode must report n_uniq = 3 /
-    // dup_docs = 1; approx mode serves the HLL++ estimate in the SAME
-    // schema (on a 3-element domain the default-precision sketch is
-    // exact, so the values coincide — the seam under test is the plan
-    // swap, pinned here so a conf typo can never silently change modes)
+    // 4 docs, 3 distinct texts: n_uniq = 3, so dup_docs = 1
     Seq(
       (1L, "aa bb", "en", "s0", 5L),
       (2L, "aa bb", "en", "s0", 5L),
@@ -372,22 +368,11 @@ class PipelineOpsSpec extends SparkSpec {
       (4L, "ee ff", "en", "s0", 5L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/documents.parquet")
-    def run() = TextAnalysis.sourceDatasheet(spark, dir).collect()
+    val sheet = TextAnalysis.sourceDatasheet(spark, dir)
+    val got = sheet.collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(8), r.getLong(9)))
-    val exact = run()
-    assert(exact.toSeq == Seq(("s0", 4L, 1L, 250000L)), s"got ${exact.toSeq}")
-    // the swap is visible in the plan: exact mode carries the distinct
-    // (expand) aggregate, approx mode must not
-    def planHasExpand: Boolean = TextAnalysis.sourceDatasheet(spark, dir)
-      .queryExecution.executedPlan.toString.contains("Expand")
-    assert(planHasExpand, "exact mode should plan count(DISTINCT) via Expand")
-    spark.conf.set(graft.Output.ApproxDistinctKey, "true")
-    try {
-      assert(!planHasExpand,
-        "approx mode must not plan an exact-distinct Expand")
-      val approx = run()
-      assert(approx.toSeq == Seq(("s0", 4L, 1L, 250000L)),
-        s"got ${approx.toSeq}")
-    } finally spark.conf.unset(graft.Output.ApproxDistinctKey)
+    assert(got.toSeq == Seq(("s0", 4L, 1L, 250000L)), s"got ${got.toSeq}")
+    assert(sheet.queryExecution.executedPlan.toString.contains("Expand"),
+      "the exact count(DISTINCT) should plan via Expand")
   }
 }

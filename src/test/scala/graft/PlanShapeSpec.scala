@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.SaveMode
 
 import graft.operators.Dedup
 
@@ -125,34 +125,23 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
-  test("spark.graft.orderedOutput=false drops the global output sort, same rows") {
+  test("d1 plans exactly one global output sort") {
     import org.apache.spark.sql.execution.SortExec
     val dir = writeDocs(Seq(
       (1L, "alpha beta", "s0"), (2L, "alpha beta", "s0"),
       (3L, "gamma delta", "s0"), (4L, "epsilon zeta", "s0")))
     // AQE-off like staticCounts: pre-execution, AdaptiveSparkPlanExec hides
     // its children from collect, so introspect the static physical plan
-    def globalSorts(df: => DataFrame): Int = {
-      val prev = spark.conf.getOption("spark.sql.adaptive.enabled")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      try df.queryExecution.executedPlan.collect {
+    val prev = spark.conf.getOption("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val globalSorts =
+      try Dedup.exactDedup(spark, dir).queryExecution.executedPlan.collect {
         case s: SortExec if s.global => s
       }.size
       finally prev match {
         case Some(v) => spark.conf.set("spark.sql.adaptive.enabled", v)
         case None => spark.conf.unset("spark.sql.adaptive.enabled")
       }
-    }
-    val ordered = Dedup.exactDedup(spark, dir)
-    assert(globalSorts(ordered) == 1,
-      "harness default must keep the deterministic output sort")
-    spark.conf.set(Output.OrderedKey, "false")
-    try {
-      val unordered = Dedup.exactDedup(spark, dir)
-      assert(globalSorts(unordered) == 0,
-        "production mode must not range-partition the output")
-      assert(unordered.collect().toSet == ordered.collect().toSet,
-        "the seam must change presentation order only")
-    } finally spark.conf.unset(Output.OrderedKey)
+    assert(globalSorts == 1, "d1 must keep the deterministic output sort")
   }
 }

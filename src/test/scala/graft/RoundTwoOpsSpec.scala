@@ -192,10 +192,5 @@ class RoundTwoOpsSpec extends SparkSpec {
     // winsorized mean: (1 + 1..99 sum + 99)/101 = (4950 + 1 + 99 - 0 - 100 ... )
     // = (sum 0..100 = 5050; replace 0->1 (+1), 100->100 (-1)) = 5050/101 = 50.0
     assert(got.toSeq == Seq(("A", 101L, 50.0, 1L, 1L, 1.0, 99.0)), s"got ${got.toSeq}")
-    // the fleet-scale sketch path (approx_percentile) is exact at this size
-    val approx = Analytics.winsorizedStats(spark, dir, exact = false)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2),
-        r.getLong(3), r.getLong(4), r.getDouble(5), r.getDouble(6)))
-    assert(approx.toSeq == got.toSeq, s"approx ${approx.toSeq}")
   }
 }

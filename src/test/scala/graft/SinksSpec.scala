@@ -21,27 +21,6 @@ class SinksSpec extends SparkSpec {
     assert(content == "10,1,1,50,0,95")
   }
 
-  test("partitioned parquet writes day directories and readers prune partitions") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val out = Files.createTempDirectory("part-out-").toString
-    val df = Seq(
-      (1L, "2024-01-01", 10.0), (2L, "2024-01-01", 20.0),
-      (3L, "2024-01-02", 30.0), (4L, "2024-01-03", 40.0))
-      .toDF("id", "day", "value")
-    Sinks.writePartitionedParquet(df, out, Seq("day"))
-
-    val dayDirs = new java.io.File(out).listFiles()
-      .filter(_.isDirectory).map(_.getName).sorted
-    assert(dayDirs.toSeq == Seq("day=2024-01-01", "day=2024-01-02", "day=2024-01-03"))
-
-    val read = spark.read.parquet(out).filter(col("day") === "2024-01-02")
-    assert(read.collect().map(_.getAs[Long]("id")).toSeq == Seq(3L))
-    val scan = read.queryExecution.executedPlan.toString
-    assert(scan.contains("PartitionFilters: [isnotnull(day"),
-      s"expected the day predicate to prune partitions, got:\n$scan")
-  }
-
   test("shard writer bounds file size and sorts within each shard") {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
@@ -195,7 +174,7 @@ class SinksSpec extends SparkSpec {
       "books content preserved through the oversize rewrite")
   }
 
-  test("jsonl and orc round-trip the documents schema losslessly") {
+  test("jsonl round-trips the documents schema losslessly") {
     import org.apache.spark.sql.types._
     val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
     val docSchema = StructType(Seq(
@@ -208,17 +187,6 @@ class SinksSpec extends SparkSpec {
     assert(backJ.count() == docs.count())
     assert(backJ.exceptAll(docs).isEmpty && docs.exceptAll(backJ).isEmpty,
       "jsonl round-trip must be lossless")
-
-    val od = Files.createTempDirectory("orc-").toString
-    Sinks.writeOrc(docs, od)
-    val backO = EventSources.orc(spark, od)
-    assert(backO.schema == docs.schema, "orc preserves the schema exactly")
-    assert(backO.exceptAll(docs).isEmpty && docs.exceptAll(backO).isEmpty)
-    // ORC scans take pushed filters like parquet
-    val plan = backO.filter(org.apache.spark.sql.functions.col("doc_id") === 7L)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters: [IsNotNull(doc_id), EqualTo(doc_id,7)"),
-      s"expected pushdown in:\n$plan")
   }
 
   test("streaming: csv file source -> radar -> csv sink") {
@@ -291,27 +259,5 @@ class SinksSpec extends SparkSpec {
     val got = spark.read.parquet(out)
       .collect().map(r => (r.getAs[Long]("id"), r.getAs[Int]("batch_id"))).sorted
     assert(got.toSeq == Seq((1L, 0), (2L, 0), (3L, 1)))
-  }
-
-  test("stream-static enrichment broadcasts the dim and decorates every batch") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dim = Seq((1L, "gold"), (2L, "basic")).toDF("user_id", "tier")
-    val input = MemoryStream[Long]
-    val enriched = graft.streaming.StreamOps.enrichWithDim(
-      input.toDS().toDF("user_id"), dim, "user_id")
-    val q = enriched.writeStream.format("memory").queryName("enrich_out")
-      .outputMode("append").start()
-    try {
-      input.addData(1L)
-      q.processAllAvailable()
-      input.addData(2L, 1L)
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("enrich_out")
-      .collect().map(r => (r.getAs[Long]("user_id"), r.getAs[String]("tier")))
-      .sorted
-    assert(got.toSeq == Seq((1L, "gold"), (1L, "gold"), (2L, "basic")))
   }
 }
